@@ -2429,7 +2429,7 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the paper's own discipline — 50k clusters for LAION) so the pair
     stage stays linear; the FIT/ASSIGN is two-level (r11): a coarse
     k₁ ≈ √k_total fit shards the corpus into cells, then every cell
-    trains its own fine quantizer in lock-step jobs
+    trains its own fine quantizer inside one grouped-map job
     (kmeans_fit_grouped) and each row is assigned against ONLY its
     cell's fine centroids (assign_clusters_multi). A flat k ∝ n fit is
     n·k = n²/100 flops and measured slope 1.42/decade at sf1→sf10
@@ -2470,14 +2470,16 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.001/0.01/0.1. The repartitioned frame still feeds the
     # flop-dense assign/pair stages below.
     coarse = clustering.kmeans_fit(emb_raw, k=k1, iters=_KM_ITERS, n=n_emb)
-    # r14: with the fused fine fit the cell assignment feeds exactly
-    # TWO jobs (the one-shot grouped fit and the final query) instead
-    # of ~2·iters — the eager checkpoint's materialization barrier
-    # (~1.5-2.4 s at sf0.1) now costs more than recomputing the
-    # map-only Arrow assign kernel once per consumer, so the relation
-    # stays lazy. (At 100 TB the assignment persists as a table — the
-    # corpus_bands discipline — which is a sink choice, not an extra
-    # barrier inside the query.)
+    # r14: with the one-job fine fit the cell assignment feeds exactly
+    # TWO jobs (the grouped fit and the final query) instead of
+    # ~2·iters, and an EAGER checkpoint's materialization barrier
+    # (~1.5-2.4 s at sf0.1) costs more than the reuse saves. So the
+    # checkpoint is non-eager: no job of its own — the first consumer
+    # (the fit's job) stores the blocks as a side effect and the final
+    # query reads them instead of re-running the assign kernel. (At
+    # 100 TB the assignment persists as a table — the corpus_bands
+    # discipline — which is a sink choice, not an extra barrier inside
+    # the query.)
     cells = clustering.assign_clusters(emb, coarse).select(
         "vec_id", "embedding", F.col("cluster").alias("cell")
     ).localCheckpoint(eager=False)
@@ -2492,13 +2494,12 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         memo_df=emb,
         memo_tag=f"sem_fine_k1={k1}",
         # r14: ALL fine-fit Lloyd rounds run per-cell inside ONE
-        # grouped-map job (was: fused seed window + iters-1 sequential
-        # lock-step jobs — ~0.7-1 s of driver fixed cost EACH at sf0.1,
+        # grouped-map job (was: a seed window + iters-1 sequential
+        # phase jobs — ~0.7-1 s of driver fixed cost EACH at sf0.1,
         # the orchestration that pinned this entry's 8→32-core scaling
-        # at 1.0). Per-cell trajectory parity with the distributed
-        # phases is pinned by tests/test_r14_fused_fit.py and the
-        # oracle replays the identical fit in SQL.
-        fused=True,
+        # at 1.0). Per-cell parity with kmeans_fit is pinned by
+        # tests/test_clustering.py and the oracle replays the identical
+        # fit in SQL.
     )
     e2 = clustering.assign_clusters_multi(
         cells, fine, tag_col="cell", out_col="fid"

@@ -324,14 +324,11 @@ def streaming_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # single-pass encode: coarse + both subspace argmins in ONE
     # Arrow-batched kernel (no per-subspace vec_id joins — see
-    # ann_index). r9: the kernel replaces three literal-centroid argmin
-    # expressions — attested identical on the fixture corpus (the two
-    # paths round differently only in the .5e-6-midpoint ulp class,
-    # attested absent here; see _assign_np_udf's caveat — new data
-    # re-checks, not trusts) at ~3.6x the throughput, and no janino
-    # compile of the 3-quantizer expression tree on the entry's cold
-    # path. Centroids ride the UDF closure — the k×dim broadcast
-    # pattern, nothing driver-side per row.
+    # ann_index), the same _nearest fold the fit assigned with. r9: it
+    # replaced three literal-centroid argmin expressions at ~3.6x the
+    # throughput, with no janino compile of the 3-quantizer expression
+    # tree on the entry's cold path. Centroids ride the UDF closure —
+    # the k×dim broadcast pattern, nothing driver-side per row.
     kern = clustering.multi_encode_np(
         {
             "cluster": (coarse, None),

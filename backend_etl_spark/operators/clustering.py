@@ -6,16 +6,21 @@ each query to its probe list(s).
 Execution model (the standard scale-out Lloyd's):
 - the k×dim centroid table lives on the DRIVER (tiny — 8×64 doubles
   here; even k=65536, dim=1024 is ~0.5 GB, broadcastable),
-- each iteration is ONE distributed pass: broadcast centroids as a
-  literal expression, per-row argmin (map-only), then a
-  posexplode → groupBy(cluster, dim) partial-aggregated avg — a single
-  shuffle of k×dim rows, independent of corpus size,
+- each iteration is ONE distributed pass: the centroids ride the
+  closure of an Arrow-batched numpy kernel, per-row argmin (map-only),
+  then a posexplode → groupBy(cluster, dim) partial-aggregated avg — a
+  single shuffle of k×dim rows, independent of corpus size,
 - centroid averages are rounded to 6 dp each iteration so the whole
   trajectory is engine-reproducible (the DuckDB oracle unrolls the same
   iterations in SQL and lands on bit-identical centroids).
 
+Every row-to-centroid assignment in this module runs through ONE
+distance fold (_nearest). Only the multi-probe argsort
+(probe_clusters) and single-centroid distances (_dist2) stay Catalyst
+literal expressions — they serve a handful of query rows.
+
 Determinism: seeds are strided picks over vec_id, argmin ties break on
-cluster id, folds run in array order. No UDF anywhere.
+cluster id, folds run in array order.
 """
 
 from __future__ import annotations
@@ -68,7 +73,7 @@ def _lit_vec(values) -> Column:
 def _dist2(v: Column, centroid: list[float]) -> Column:
     """Squared L2 distance to a literal centroid — ordered fold, exactly
     reproducible as list_reduce in the oracle. Single-centroid helper
-    (residual/ADC paths); the k-way argmin uses _centroid_structs."""
+    (residual/ADC paths); the k-way argsort uses _centroid_structs."""
     c = _lit_vec(centroid)
     return F.aggregate(
         F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
@@ -112,105 +117,57 @@ def _centroid_structs(
     )
 
 
-def nearest_centroid(
-    vec: Column, centroids: dict[int, list[float]]
-) -> Column:
-    """The argmin-over-literal-centroids STRUCT (fields ``d``, ``cid``)
-    assign_clusters is built on, exposed as a bare expression so a
-    multi-quantizer encode (coarse + N PQ subspaces) can compute every
-    assignment in ONE map-only select — a per-subspace
-    assign-then-join-on-vec_id would shuffle the full corpus once per
-    subspace at scale."""
-    return F.array_min(_centroid_structs(centroids, _as_double(vec)))
+def _centroid_matrix(
+    centroids: dict[int, list[float]],
+) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, k×dim float64 matrix) of a centroid table, in id order."""
+    ids = sorted(centroids)
+    return (
+        np.array(ids, dtype=np.int64),
+        np.array([centroids[c] for c in ids], dtype=np.float64),
+    )
 
 
-#: the Catalyst literal-array argmin (a higher-order transform,
-#: evaluated interpreted per element) loses to the Arrow-batched numpy
-#: kernel at every measured k on warm sessions (r7, sf0.1 / 2000
-#: vectors: k=4 0.39s vs 0.24s, k=8 0.51 vs 0.22, k=16 0.80 vs 0.19,
-#: k=32 1.54 vs 0.24 — the literal cost is ~linear in k, the kernel
-#: flat). The literal path is kept only below k=5, where the expression
-#: is trivial and a cold query avoids the one-time Python-worker spawn.
-NP_ASSIGN_MIN_K = 5
+def _nearest(
+    X: np.ndarray, cids: np.ndarray, C: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The nearest-centroid fold every assignment in this module runs:
+    per row of ``X``, the id (from ``cids``) of the closest row of ``C``
+    and its rounded squared distance.
 
-
-def _assign_np_udf(centroids: dict[int, list[float]]):
-    """Vectorized nearest-centroid kernel with BIT-IDENTICAL numerics to
-    the Catalyst fold: distances accumulate SEQUENTIALLY over dims
-    (vectorized across the row batch, looped over j), so every cell sees
-    the exact IEEE op sequence ``((x1-c1)² + (x2-c2)²) + ...`` the
-    zip_with/aggregate expression and the oracle's list_reduce produce.
-    Rounding is floor(d·1e6 + 0.5)/1e6 — half-away-from-zero on the
-    binary value for d ≥ 0, which matches the DuckDB oracle's round().
-    CAVEAT: the k < NP_ASSIGN_MIN_K literal path uses F.round (HALF_UP
-    on the shortest decimal repr), which differs from half-away-on-
-    binary ONLY when a distance lands within an ulp of an exact .5e-6
-    midpoint — a class attested absent in this data (the same ulp
-    class BASELINE §r documents for window_lag_value_delta). The FOLD
-    is bit-identical across paths; the final rounding semantic is not,
-    so an entry whose adaptive k crosses NP_ASSIGN_MIN_K between SFs
-    could in principle split on a midpoint ulp. np.argmin takes the
-    FIRST minimum, which IS the tie-break on lowest cluster id."""
-    cids = np.array(sorted(centroids), dtype=np.int64)
-    C = np.array([centroids[c] for c in sorted(centroids)], dtype=np.float64)
-
-    @F.pandas_udf("struct<cid:int, d:double>")
-    def _assign(s: pd.Series) -> pd.DataFrame:
-        X = np.stack(s.to_numpy()).astype(np.float64)  # float32→double exact
-        D = np.zeros((X.shape[0], C.shape[0]))
-        for j in range(X.shape[1]):
-            diff = X[:, j, None] - C[None, :, j]
-            D += diff * diff
-        D = np.floor(D * 1e6 + 0.5) / 1e6
-        idx = D.argmin(axis=1)
-        return pd.DataFrame(
-            {
-                "cid": cids[idx].astype("int32"),
-                "d": D[np.arange(len(idx)), idx],
-            }
-        )
-
-    return _assign
+    Distances accumulate SEQUENTIALLY over dims (vectorized across the
+    row batch, looped over j), so every cell sees the exact IEEE op
+    sequence ``((x1-c1)² + (x2-c2)²) + ...`` the oracle's list_reduce
+    produces. Rounding is floor(d·1e6 + 0.5)/1e6 — half-away-from-zero
+    on the binary value for d ≥ 0, which matches the DuckDB oracle's
+    round(). np.argmin takes the FIRST minimum, which IS the tie-break
+    on lowest cluster id."""
+    D = np.zeros((X.shape[0], C.shape[0]))
+    for j in range(X.shape[1]):
+        diff = X[:, j, None] - C[None, :, j]
+        D += diff * diff
+    D = np.floor(D * 1e6 + 0.5) / 1e6
+    idx = D.argmin(axis=1)
+    return cids[idx].astype("int32"), D[np.arange(len(idx)), idx]
 
 
 def _assign_np_udf_multi(cent_by_tag: dict[int, dict[int, list[float]]]):
-    """Tag-dispatched variant of _assign_np_udf for kmeans_fit_multi's
-    lock-step phases: one Arrow-batched kernel serves every big-k tag
-    in the same job, selecting that tag's centroid matrix per row
-    block. Numerics per tag are EXACTLY _assign_np_udf's (same
-    sequential dim fold, same floor(d*1e6+0.5)/1e6 rounding, same
-    first-minimum tie-break), so the memoized result for a tag is
-    bit-identical to an individual kmeans_fit over it. Rows whose tag
-    is not in ``cent_by_tag`` (literal-path tags sharing the
-    projection under a CASE WHEN) get a zero struct the CASE never
-    selects."""
-    mats = {
-        int(t): (
-            np.array(sorted(c), dtype=np.int64),
-            np.array([c[cid] for cid in sorted(c)], dtype=np.float64),
-        )
-        for t, c in cent_by_tag.items()
-    }
+    """Tag-dispatched nearest-centroid kernel: one Arrow-batched UDF
+    serves every tag, running _nearest over each tag's row block
+    against that tag's centroid matrix. Rows whose tag is not in
+    ``cent_by_tag`` get id 0."""
+    mats = {int(t): _centroid_matrix(c) for t, c in cent_by_tag.items()}
 
-    @F.pandas_udf("struct<cid:int, d:double>")
-    def _assign(tag: pd.Series, s: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf("int")
+    def _assign(tag: pd.Series, s: pd.Series) -> pd.Series:
         tags = tag.to_numpy()
-        out_cid = np.zeros(len(tags), dtype="int32")
-        out_d = np.zeros(len(tags), dtype=np.float64)
+        out = np.zeros(len(tags), dtype="int32")
         for t, (cids, C) in mats.items():
             mask = tags == t
-            if not mask.any():
-                continue
-            X = np.stack(s[mask].to_numpy()).astype(np.float64)
-            D = np.zeros((X.shape[0], C.shape[0]))
-            for j in range(X.shape[1]):
-                diff = X[:, j, None] - C[None, :, j]
-                D += diff * diff
-            D = np.floor(D * 1e6 + 0.5) / 1e6
-            idx = D.argmin(axis=1)
-            out_cid[mask] = cids[idx].astype("int32")
-            out_d[mask] = D[np.arange(len(idx)), idx]
-        return pd.DataFrame({"cid": out_cid, "d": out_d})
+            if mask.any():
+                X = np.stack(s[mask].to_numpy()).astype(np.float64)
+                out[mask] = _nearest(X, cids, C)[0]
+        return pd.Series(out)
 
     return _assign
 
@@ -222,41 +179,28 @@ def assign_clusters(
 ) -> DataFrame:
     """Nearest-centroid assignment: adds ``cluster`` and ``dist2``.
 
-    Map-only and shuffle-free on both paths: for small k the argmin is
-    an array_min over a literal struct array (dist rounded, tie-break on
-    cluster id); for k ≥ NP_ASSIGN_MIN_K the same argmin runs as an
-    Arrow-batched numpy kernel (see _assign_np_udf — fold bit-identical,
-    rounding semantics differ only on a .5e-6-midpoint-ulp class
-    attested absent; oracle parity green at every SF), because the
-    interpreted higher-order transform costs ~k·dim boxed ops per row
-    and dominates wall-clock once k scales with corpus size.
+    Map-only and shuffle-free: the argmin runs in the Arrow-batched
+    numpy kernel (multi_encode_np over _nearest — dist rounded,
+    tie-break on cluster id). Rows with a NULL embedding are dropped.
     """
+    # NULL embeddings are filtered before the kernel, so a NULL row
+    # neither reaches it (it raises on one) nor lands in a shared
+    # cluster that would join with every other NULL row downstream.
+    #
     # cluster is wrapped non-nullable (coalesce with a literal the
     # kernel can never emit): downstream entries equi-join on it, and
     # the join's inferred IsNotNull(cluster) constraint used to be
     # pushed BELOW this projection — duplicating the assignment kernel
-    # (two ArrowEvalPython nodes evaluating the same _assign over the
-    # full corpus, guide §4.4's filter-split pattern). A non-nullable
-    # key yields no IsNotNull constraint, so the kernel runs once.
-    # Values are unchanged: cid is never NULL on the kernel path (the
-    # kernel raises on NULL embeddings) and the fixture corpora carry
-    # none on the literal path.
-    if len(centroids) >= NP_ASSIGN_MIN_K:
-        best = _assign_np_udf(centroids)(_as_double(F.col(emb_col)))
-        return df.withColumn(
-            "cluster", F.coalesce(best["cid"], F.lit(-1))
-        ).withColumn("dist2", best["d"])
-    # literal path: nothing raises on a NULL embedding (unlike the numpy
-    # kernel), so a NULL row would coalesce into the shared -1 cluster
-    # and silently join with every other NULL row downstream (r13 ADVICE
-    # medium). Filtering NULL embeddings first makes -1 provably
-    # unreachable on this path too — and matches the exclusion the old
-    # NULL-key equi-join semantics gave those rows.
+    # (two ArrowEvalPython nodes evaluating the same UDF over the full
+    # corpus, guide §4.4's filter-split pattern). A non-nullable key
+    # yields no IsNotNull constraint, so the kernel runs once.
     df = df.where(F.col(emb_col).isNotNull())
-    best = nearest_centroid(F.col(emb_col), centroids)
+    best = multi_encode_np({"cluster": (centroids, None)}, with_dist=True)(
+        _as_double(F.col(emb_col))
+    )
     return df.withColumn(
-        "cluster", F.coalesce(best["cid"], F.lit(-1))
-    ).withColumn("dist2", best["d"])
+        "cluster", F.coalesce(best["cluster"], F.lit(-1))
+    ).withColumn("dist2", best["cluster_d"])
 
 
 def assign_clusters_multi(
@@ -270,32 +214,16 @@ def assign_clusters_multi(
     row's candidates are ONLY its group's centroids (the second level of
     a two-level assignment — a row never sees another cell's centroids,
     so a k-total fit costs n·(k/k₁) comparisons here instead of n·k).
-    Per-tag path follows assign_clusters' NP_ASSIGN_MIN_K rule; adds
-    ``out_col`` (the group-local centroid id, int)."""
-    tags = sorted(cents_by_tag)
-    lit_tags = [t for t in tags if len(cents_by_tag[t]) < NP_ASSIGN_MIN_K]
-    np_tags = [t for t in tags if len(cents_by_tag[t]) >= NP_ASSIGN_MIN_K]
-    tag = F.col(tag_col).cast("int")
-    cid = None
-    for t in lit_tags:
-        arg = nearest_centroid(F.col(emb_col), cents_by_tag[t])["cid"]
-        cid = (
-            F.when(tag == t, arg) if cid is None else cid.when(tag == t, arg)
-        )
-    if np_tags:
-        kern = _assign_np_udf_multi({t: cents_by_tag[t] for t in np_tags})(
-            tag, _as_double(F.col(emb_col))
-        )["cid"]
-        cid = kern if cid is None else cid.otherwise(kern)
+    Same fold and NULL contract as assign_clusters; adds ``out_col``
+    (the group-local centroid id, int)."""
     # non-nullable for the same reason as assign_clusters: the fine
     # cluster id becomes an equi-join key (SemDeDup pair stage) and a
     # nullable key's inferred IsNotNull is pushed below the projection,
-    # duplicating the kernel. -1 is unreachable: the numpy kernel raises
-    # on NULL embeddings, and when any literal-path tag is present NULL
-    # rows are filtered here first (r13 ADVICE medium — the literal
-    # argmin would otherwise map them all onto a shared -1 cluster).
-    if lit_tags:
-        df = df.where(F.col(emb_col).isNotNull())
+    # duplicating the kernel
+    df = df.where(F.col(emb_col).isNotNull())
+    cid = _assign_np_udf_multi(cents_by_tag)(
+        F.col(tag_col).cast("int"), _as_double(F.col(emb_col))
+    )
     return df.withColumn(out_col, F.coalesce(cid, F.lit(-1)))
 
 
@@ -330,8 +258,8 @@ def seed_centroids(
 #: plan, k, iters, id_col, emb_col). Lloyd's here is fully deterministic
 #: (strided seeds, rounded updates, id tie-breaks), so a repeated fit
 #: over the same logical input is a pure recomputation — and profiling
-#: shows the cost is fixed driver overhead (seed jobs + literal-centroid
-#: codegen), NOT data size: ~2.8 s at sf0.001 and sf0.1 alike. ~14
+#: shows the cost is fixed driver overhead (seed and per-phase jobs),
+#: NOT data size: ~2.8 s at sf0.001 and sf0.1 alike. ~14
 #: catalog entries train the identical quantizer; memoizing is the
 #: in-process form of the FAISS train-once/persist discipline the
 #: persisted-index entries already follow, and at 100 TB it is exactly
@@ -512,31 +440,49 @@ def _round_like_spark(x: float, dp: int = CENT_DP) -> float:
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
 
 
-def _fused_cell_fit(k_for_count, iters: int):
+#: Largest stacked cell matrix (rows × dim × 8 bytes of float64) one
+#: per-cell fit task may build. A grouped-map task holds its whole group
+#: in one Python worker: the Arrow-decoded object column, this matrix,
+#: and a rows × k distance matrix. The budget is Spark's default
+#: per-Python-worker memory, ``spark.python.worker.memory`` = 512 MiB;
+#: the stacked matrix gets half, the rest is left for the object column
+#: and the distances. At dim 64 that is ~524k rows per cell; SemDeDup
+#: cells hold ~10·√n rows (about 250 at sf0.1, 4.5k at sf10).
+CELL_FIT_MAX_BYTES = 256 * 1024 * 1024
+
+
+def _cell_fit(k_for_count, iters: int):
     """Per-cell Lloyd's as a grouped-map kernel: ALL rounds of one
     cell's fine fit run locally inside a single task — the whole
-    grouped fit is ONE Spark job instead of seed-window + (iters-1)
-    lock-step jobs (r14: the sequential phase jobs were pure driver
-    fixed cost at ~0.7-1 s each and pinned semdedup's 8→32-core
-    scaling at 1.0).
+    grouped fit is ONE Spark job (r14: the former per-phase jobs were
+    pure driver fixed cost at ~0.7-1 s each and pinned semdedup's
+    8→32-core scaling at 1.0).
 
-    Numerics per cell: seeds follow the rank_mod strided rule
+    Numerics per cell: seeds are strided over the cell's vec_id rank
     (vec_id-sorted, rank % stride == 0, first k); assignment is the
-    exact _assign_np_udf fold (sequential dim accumulation,
-    floor(d·1e6+0.5)/1e6 rounding, first-minimum tie-break); updates
-    are the member mean rounded with _round_like_spark — the same
-    HALF_UP-on-shortest-decimal semantics as the distributed
-    F.round(F.avg(...)) update. Summation order (numpy pairwise over
-    vec_id-sorted members vs Spark's partition-ordered partial
-    aggregates) differs below the 6-dp rounding, the same
-    attested-stable class as the DuckDB oracle parity
-    (tests/test_r14_fused_fit.py pins fused == distributed)."""
+    _nearest fold; updates are the member mean rounded with
+    _round_like_spark — the same HALF_UP-on-shortest-decimal semantics
+    as kmeans_fit's distributed F.round(F.avg(...)) update. Summation
+    order (numpy pairwise over vec_id-sorted members vs Spark's
+    partition-ordered partial aggregates) differs below the 6-dp
+    rounding, the same attested-stable class as the DuckDB oracle
+    parity (tests/test_clustering.py pins grouped == per-cell kmeans_fit).
+
+    A cell whose stacked matrix would exceed CELL_FIT_MAX_BYTES
+    raises instead of exhausting the worker."""
 
     def fit_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         tag = int(pdf["_tag"].iloc[0])
+        cn = len(pdf)
+        dim = len(pdf["_v"].iloc[0])
+        if cn * dim * 8 > CELL_FIT_MAX_BYTES:
+            raise ValueError(
+                f"kmeans_fit_grouped: cell {tag} holds {cn} rows × {dim} "
+                f"dims ({cn * dim * 8} bytes), above CELL_FIT_MAX_BYTES "
+                f"({CELL_FIT_MAX_BYTES}) — use more, smaller cells"
+            )
         pdf = pdf.sort_values("_id")
         X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        cn = len(pdf)
         k = int(k_for_count(cn))
         stride = max(cn // k, 1)
         seed_idx = list(range(0, cn, stride))[:k]
@@ -544,17 +490,11 @@ def _fused_cell_fit(k_for_count, iters: int):
             i: X[seed_idx[i]] for i in range(len(seed_idx))
         }
         for _ in range(iters - 1):
-            cids = np.array(sorted(cents), dtype=np.int64)
-            C = np.array([cents[c] for c in sorted(cents)], dtype=np.float64)
-            D = np.zeros((cn, C.shape[0]))
-            for j in range(X.shape[1]):
-                diff = X[:, j, None] - C[None, :, j]
-                D += diff * diff
-            D = np.floor(D * 1e6 + 0.5) / 1e6
-            idx = D.argmin(axis=1)
+            cids, C = _centroid_matrix(cents)
+            nearest = _nearest(X, cids, C)[0]
             new_cents: dict[int, np.ndarray] = {}
-            for ci, c in enumerate(cids):
-                mask = idx == ci
+            for c in cids:
+                mask = nearest == c
                 if not mask.any():
                     continue  # emptied cluster drops out (Lloyd degeneracy)
                 m = X[mask].mean(axis=0)
@@ -582,36 +522,27 @@ def kmeans_fit_grouped(
     emb_col: str = "embedding",
     memo_df: DataFrame | None = None,
     memo_tag: str | None = None,
-    k_for_count_col=None,
-    fused: bool = False,
 ) -> dict[int, dict[int, list[float]]]:
-    """Lock-step Lloyd's over the GROUPS of one pre-tagged relation —
-    the second level of a two-level (coarse → per-cell fine) fit. Same
-    phase jobs as kmeans_fit_multi, but the input arrives as a single
-    frame with a group column instead of a dict of relations, so a
-    k₁-cell corpus is scanned ONCE per phase rather than once per cell.
+    """Lloyd's over the GROUPS of one pre-tagged relation — the second
+    level of a two-level (coarse → per-cell fine) fit. Every group's
+    rounds run inside one grouped-map task (_cell_fit), so the
+    whole fit is ONE Spark job; a task holds one cell's vectors, never
+    the corpus, and a cell past CELL_FIT_MAX_BYTES fails loudly.
 
     ``k_for_count`` maps a cell's row count to its fine k (e.g.
     ``lambda n: max(1, n // 100)`` keeps fine clusters ~100 vectors for
-    a SemDeDup pair stage). Seeds/updates per group are identical to an
-    individual kmeans_fit over that group's rows.
+    a SemDeDup pair stage). Seeds/updates per group equal an individual
+    kmeans_fit over that group's rows with vec_ids remapped to their
+    0-based rank within the group (striding on the rank, not the id:
+    a cell whose members share no multiple of the stride would
+    otherwise seed EMPTY).
 
     Memoization: ``df`` is typically checkpointed (no stable plan key),
     so the caller passes ``memo_df`` — the UPSTREAM parquet-backed
     relation the tagging was derived from — plus a ``memo_tag`` naming
     the deterministic derivation (e.g. "sem_fine_k1=8_iters=3"). The
     fit is then cached per process under that pair, the same
-    train-once-per-corpus-snapshot discipline as _FIT_CACHE.
-
-    ``k_for_count_col``: the same cell-count→k rule as ``k_for_count``
-    but as a Column expression (e.g. ``lambda cn: F.greatest(
-    F.floor(cn / 100), F.lit(1))``). When given, per-cell counts,
-    strides, and seeds all come out of ONE window job instead of a
-    counts job + a seeds job — the cold-path fusion of r11 verdict
-    item 4 (each job on cold local[1] costs ~1 s of fixed overhead).
-    Numerics are identical to the two-job path (same rank_mod rule);
-    the collected rows carry the SQL-computed k so a drifted
-    ``k_for_count``/``k_for_count_col`` pair fails loudly."""
+    train-once-per-corpus-snapshot discipline as _FIT_CACHE."""
     key = None
     if memo_df is not None and memo_tag is not None:
         plan = _plan_key(memo_df)
@@ -628,78 +559,15 @@ def kmeans_fit_grouped(
         F.col(id_col).alias("_id"),
         _as_double(F.col(emb_col)).alias("_v"),
     )
-    if fused:
-        # ONE grouped-map job computes every cell's full trajectory
-        # (see _fused_cell_fit); rows-per-group is bounded by the
-        # caller's cell sizing (the coarse fit's ~√k_total cells), so
-        # a task holds one cell's vectors, never the corpus.
-        rows = tagged.groupBy("_tag").applyInPandas(
-            _fused_cell_fit(k_for_count, iters),
-            schema="_tag int, fid int, cv array<double>",
-        ).collect()
-        if not rows:
-            raise ValueError("kmeans_fit_grouped: empty input relation")
-        cents = {}
-        for r in rows:
-            cents.setdefault(r["_tag"], {})[r["fid"]] = [
-                float(x) for x in r["cv"]
-            ]
-    elif k_for_count_col is not None:
-        from pyspark.sql.window import Window
-
-        wa = Window.partitionBy("_tag")
-        w = Window.partitionBy("_tag").orderBy("_id")
-        seed_rows = (
-            tagged.withColumn("_cn", F.count(F.lit(1)).over(wa))
-            .withColumn(
-                "_kfk", k_for_count_col(F.col("_cn")).cast("int")
-            )
-            .withColumn(
-                "_stride",
-                F.greatest(
-                    F.floor(F.col("_cn") / F.col("_kfk")), F.lit(1)
-                ).cast("int"),
-            )
-            .withColumn("_rk", F.row_number().over(w) - 1)
-            .where((F.col("_rk") % F.col("_stride")) == 0)
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= F.col("_kfk"))
-            .select("_tag", "_rn", "_v", "_cn", "_kfk")
-            .collect()
-        )
-        if not seed_rows:
-            raise ValueError("kmeans_fit_grouped: empty input relation")
-        counts = {r["_tag"]: r["_cn"] for r in seed_rows}
-        ks = {t: int(k_for_count(n)) for t, n in counts.items()}
-        drift = {
-            r["_tag"]
-            for r in seed_rows
-            if r["_kfk"] != ks[r["_tag"]]
-        }
-        if drift:
-            raise ValueError(
-                "kmeans_fit_grouped: k_for_count and k_for_count_col "
-                f"disagree for tag(s) {sorted(drift)}"
-            )
-        seeds: dict[int, dict[int, list[float]]] = {t: {} for t in counts}
-        for r in sorted(seed_rows, key=lambda r: (r["_tag"], r["_rn"])):
-            seeds[r["_tag"]][r["_rn"] - 1] = [float(x) for x in r["_v"]]
-        its = {t: iters for t in counts}
-        cents = _fit_lockstep(
-            tagged, ks, its, counts, seed_mode="rank_mod", seeds=seeds
-        )
-    else:
-        counts = {
-            r["_tag"]: r["n"]
-            for r in tagged.groupBy("_tag").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
-        }
-        if not counts:
-            raise ValueError("kmeans_fit_grouped: empty input relation")
-        ks = {t: int(k_for_count(n)) for t, n in counts.items()}
-        its = {t: iters for t in counts}
-        cents = _fit_lockstep(tagged, ks, its, counts, seed_mode="rank_mod")
+    rows = tagged.groupBy("_tag").applyInPandas(
+        _cell_fit(k_for_count, iters),
+        schema="_tag int, fid int, cv array<double>",
+    ).collect()
+    if not rows:
+        raise ValueError("kmeans_fit_grouped: empty input relation")
+    cents: dict[int, dict[int, list[float]]] = {}
+    for r in rows:
+        cents.setdefault(r["_tag"], {})[r["fid"]] = [float(x) for x in r["cv"]]
     if key is not None:
         _FIT_CACHE[key] = cents
         return {
@@ -713,104 +581,48 @@ def _fit_lockstep(
     ks: dict[int, int],
     its: dict[int, int],
     counts: dict[int, int],
-    seed_mode: str = "id_mod",
-    seeds: dict[int, dict[int, list[float]]] | None = None,
 ) -> dict[int, dict[int, list[float]]]:
-    """Shared lock-step Lloyd's core over a ``(_tag, _id, _v)`` frame:
-    per-tag strided seeds, then one assignment+update job per phase for
-    all still-active tags (see kmeans_fit_multi's contract — per-tag
-    numerics identical to an individual kmeans_fit).
-
-    ``seed_mode``: ``"id_mod"`` strides on the GLOBAL id (seed_centroids'
-    rule — correct when each tag holds a full contiguous-id relation,
-    the PQ-codebook case); ``"rank_mod"`` strides on the row's RANK
-    within its tag — required when tags partition the rows (a cell whose
-    members happen to share no multiple of the stride would otherwise
-    seed EMPTY), and identical to id_mod on contiguous 0-based ids.
-
-    ``seeds``: precomputed per-tag seed centroids (the fused
-    counts+seeds window job in kmeans_fit_grouped) — skips the seeding
-    job here; must follow the same strided rule."""
+    """Lock-step Lloyd's core of kmeans_fit_multi over a ``(_tag, _id,
+    _v)`` frame: one job for every tag's strided seeds (seed_centroids'
+    rule on the tag's own ids), then one assignment+update job per
+    phase for the still-active tags — per-tag numerics identical to an
+    individual kmeans_fit."""
     from pyspark.sql.window import Window
 
     tags = sorted(ks)
-    if seeds is not None:
-        return _lockstep_phases(tagged, ks, its, seeds)
-    stride = {t: max(counts[t] // ks[t], 1) for t in tags}
-    stride_expr = F.lit(None)
-    for t in tags:
-        stride_expr = (
-            F.when(F.col("_tag") == t, F.lit(stride[t]))
-            if t == tags[0]
-            else stride_expr.when(F.col("_tag") == t, F.lit(stride[t]))
-        )
-    # one job: per-tag strided seeds (row_number == orderBy+limit on
-    # unique ids)
-    k_expr = F.lit(None)
-    for t in tags:
-        k_expr = (
-            F.when(F.col("_tag") == t, F.lit(ks[t]))
-            if t == tags[0]
-            else k_expr.when(F.col("_tag") == t, F.lit(ks[t]))
-        )
+
+    def per_tag(values: dict[int, int]) -> Column:
+        expr = F.when(F.col("_tag") == tags[0], F.lit(values[tags[0]]))
+        for t in tags[1:]:
+            expr = expr.when(F.col("_tag") == t, F.lit(values[t]))
+        return expr
+
+    stride = per_tag({t: max(counts[t] // ks[t], 1) for t in tags})
+    # row_number == orderBy+limit on unique ids
     w = Window.partitionBy("_tag").orderBy("_id")
-    if seed_mode == "rank_mod":
-        base = tagged.withColumn(
-            "_rk", F.row_number().over(w) - 1
-        ).where((F.col("_rk") % stride_expr) == 0)
-    else:
-        base = tagged.where((F.col("_id") % stride_expr) == 0)
     seed_rows = (
-        base.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k_expr)
+        tagged.where((F.col("_id") % stride) == 0)
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= per_tag(ks))
         .select("_tag", "_rn", "_v")
         .collect()
     )
     cents: dict[int, dict[int, list[float]]] = {t: {} for t in tags}
     for r in sorted(seed_rows, key=lambda r: (r["_tag"], r["_rn"])):
         cents[r["_tag"]][r["_rn"] - 1] = [float(x) for x in r["_v"]]
-    return _lockstep_phases(tagged, ks, its, cents)
 
-
-def _lockstep_phases(
-    tagged: DataFrame,
-    ks: dict[int, int],
-    its: dict[int, int],
-    cents: dict[int, dict[int, list[float]]],
-) -> dict[int, dict[int, list[float]]]:
-    """The assignment+update rounds of _fit_lockstep, from given seed
-    centroids — one job per phase over the still-active tags."""
-    tags = sorted(ks)
     for phase in range(max(its.values()) - 1):
         # a tag updates exactly its[t]-1 times, then freezes — each
-        # phase's single job runs over the still-active tags only.
-        # Per-tag assignment path follows the SAME NP_ASSIGN_MIN_K rule
-        # as assign_clusters, so the memoized result for every tag is
-        # bit-identical to what an individual kmeans_fit over that tag
-        # would cache: k >= threshold rides the Arrow numpy kernel
-        # (tag-dispatched, one UDF for all such tags), smaller k keeps
-        # the literal Catalyst argmin — which also keeps the big-k
-        # literal-centroid expressions (hundreds of py4j literals +
-        # a fresh janino compile per phase) off the driver.
+        # phase's single job runs over the still-active tags only
         active = [t for t in tags if phase < its[t] - 1]
-        lit_tags = [t for t in active if ks[t] < NP_ASSIGN_MIN_K]
-        np_tags = [t for t in active if ks[t] >= NP_ASSIGN_MIN_K]
-        assign = None
-        for t in lit_tags:
-            arg = F.array_min(_centroid_structs(cents[t], F.col("_v")))["cid"]
-            assign = (
-                F.when(F.col("_tag") == t, arg)
-                if assign is None
-                else assign.when(F.col("_tag") == t, arg)
-            )
-        if np_tags:
-            kern = _assign_np_udf_multi({t: cents[t] for t in np_tags})(
-                F.col("_tag"), F.col("_v")
-            )["cid"]
-            assign = kern if assign is None else assign.otherwise(kern)
         rows = (
-            tagged.where(F.col("_tag").isin([int(t) for t in active]))
-            .withColumn("_c", assign)
+            assign_clusters_multi(
+                tagged.where(F.col("_tag").isin(active)),
+                {t: cents[t] for t in active},
+                tag_col="_tag",
+                emb_col="_v",
+                out_col="_c",
+            )
             .select("_tag", "_c", F.posexplode("_v").alias("dim", "val"))
             .groupBy("_tag", "_c", "dim")
             .agg(F.round(F.avg("val"), CENT_DP).alias("cv"))
@@ -837,33 +649,24 @@ def multi_encode_np(
     """ONE Arrow-batched kernel computing every quantizer's
     nearest-centroid id for a row in a single pass — the IVF-PQ encode
     (coarse + N subspace codebooks) without N separate argmin
-    expressions. ``quantizers`` maps output field name → (centroids,
-    optional [lo, hi) dim slice of the embedding; None = full vector).
+    expressions, and the kernel behind assign_clusters. ``quantizers``
+    maps output field name → (centroids, optional [lo, hi) dim slice of
+    the embedding; None = full vector).
 
-    Per quantizer the numerics are EXACTLY _assign_np_udf's (sequential
-    dim fold — vectorized across the batch, looped over dims — then
-    floor(d·1e6 + 0.5)/1e6 rounding and first-minimum tie-break), i.e.
-    the same kernel assign_clusters uses for k ≥ NP_ASSIGN_MIN_K,
-    applied per subspace. Slicing commutes with the float32→double
-    upcast (both exact), so a subspace FOLD sees the identical IEEE op
-    sequence the F.slice + literal-argmin form produced; equality of
-    the final ASSIGNMENT vs the literal path is attested on the fixture
-    corpus, not universal — the two paths' rounding semantics diverge
-    on distances within an ulp of an exact .5e-6 decimal midpoint and
-    can then flip the argmin (the constructed witness in
-    tests/test_r11_mechanisms.py pins the class; a data change
-    re-attests rather than trusts). Returns a pandas_udf yielding
+    Per quantizer the numerics are the _nearest fold, applied per
+    subspace. Slicing commutes with the float32→double upcast (both
+    exact), so a subspace fold sees the identical IEEE op sequence the
+    oracle's sliced list_reduce produces. Returns a pandas_udf yielding
     ``struct<name:int, ...>`` in ``quantizers`` key order;
     ``with_dist=True`` adds a ``<name>_d`` double field per quantizer —
-    the rounded squared distance to the chosen centroid (same rounding
-    assign_clusters' dist2 column carries).
+    the rounded squared distance to the chosen centroid (assign_clusters'
+    dist2 column).
     """
     names = list(quantizers)
-    mats = {}
-    for name, (cents, span) in quantizers.items():
-        cids = np.array(sorted(cents), dtype=np.int64)
-        C = np.array([cents[c] for c in sorted(cents)], dtype=np.float64)
-        mats[name] = (cids, C, span)
+    mats = {
+        name: (*_centroid_matrix(cents), span)
+        for name, (cents, span) in quantizers.items()
+    }
     fields = [f"{n}:int" for n in names]
     if with_dist:
         fields += [f"{n}_d:double" for n in names]
@@ -883,8 +686,8 @@ def multi_encode_np(
             return pd.DataFrame(empty)
         # NULL embeddings stack to object dtype and fail deep inside the
         # fold with an opaque error — fail fast with the real cause (the
-        # kernel's contract is non-null fixed-width vectors, same as
-        # _assign_np_udf)
+        # kernel's contract is non-null fixed-width vectors;
+        # assign_clusters filters NULLs before it)
         if s.isna().any():
             raise ValueError(
                 "multi_encode_np: NULL embedding in batch — the encode "
@@ -894,15 +697,9 @@ def multi_encode_np(
         cols = {}
         for name, (cids, C, span) in mats.items():
             Xs = X if span is None else X[:, span[0]: span[1]]
-            D = np.zeros((Xs.shape[0], C.shape[0]))
-            for j in range(Xs.shape[1]):
-                diff = Xs[:, j, None] - C[None, :, j]
-                D += diff * diff
-            D = np.floor(D * 1e6 + 0.5) / 1e6
-            idx = D.argmin(axis=1)
-            cols[name] = cids[idx].astype("int32")
+            cols[name], d = _nearest(Xs, cids, C)
             if with_dist:
-                cols[f"{name}_d"] = D[np.arange(len(idx)), idx]
+                cols[f"{name}_d"] = d
         return pd.DataFrame(cols)
 
     return _encode
@@ -915,11 +712,17 @@ def probe_clusters(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe assignment: adds ``probes`` — the ``nprobe`` nearest
-    centroid ids in distance order (ties on cluster id). Same map-only
-    literal-centroid argsort as assign_clusters; exploding ``probes``
-    yields the (row, probe_cluster) relation an IVF search joins on.
-    nprobe is THE recall/cost knob at scale: probe cost grows linearly,
-    recall approaches exact as nprobe → k."""
+    centroid ids in distance order (ties on cluster id). A map-only
+    literal-centroid argsort (it serves a few query rows); exploding
+    ``probes`` yields the (row, probe_cluster) relation an IVF search
+    joins on. nprobe is THE recall/cost knob at scale: probe cost grows
+    linearly, recall approaches exact as nprobe → k.
+
+    Its distances use the same fold as _nearest but F.round (HALF_UP on
+    the shortest decimal repr) instead of floor(d·1e6 + 0.5)/1e6, so the
+    first probe can differ from assign_clusters when a distance lands
+    within an ulp of an exact .5e-6 midpoint (witness pinned in
+    tests/test_clustering.py)."""
     v = _as_double(F.col(emb_col))
     ranked = F.array_sort(_centroid_structs(centroids, v))
     probes = F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])

@@ -1,7 +1,8 @@
-"""The exact-fold numpy kernels (large-k argmin assignment, intra-bucket
-cosine pair matrices) must be BIT-IDENTICAL to the Catalyst
-zip_with/aggregate expression paths they replace — same sequential IEEE
-fold per cell, same half-away rounding, same lowest-id tie-break. These
+"""The exact-fold numpy kernels (intra-bucket cosine pair matrices)
+must be BIT-IDENTICAL to the Catalyst zip_with/aggregate expression
+paths they replace — same sequential IEEE fold per cell, same
+half-away rounding, same lowest-id tie-break. (The nearest-centroid
+kernel's parity test lives in tests/test_clustering.py.) These
 tests drive both paths over the same deterministic vectors and demand
 exact equality, including on manufactured ties.
 """
@@ -11,7 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from backend_etl_spark.operators import clustering, dedup, similarity
+from backend_etl_spark.operators import dedup, similarity
 
 
 def _vecs(spark, n: int, dim: int = 16, dup_every: int = 0):
@@ -49,27 +50,6 @@ def _vecs(spark, n: int, dim: int = 16, dup_every: int = 0):
         ).alias("embedding"),
     )
     return df
-
-
-@pytest.mark.parametrize("dup_every", [0, 3])
-def test_np_assign_matches_literal_argmin(spark, dup_every):
-    df = _vecs(spark, 400, dup_every=dup_every).cache()
-    # k=40 seeds >= NP_ASSIGN_MIN_K so assign_clusters takes the numpy
-    # path; the literal path is forced by calling nearest_centroid direct
-    cents = clustering.seed_centroids(df, k=40)
-    assert len(cents) >= clustering.NP_ASSIGN_MIN_K
-
-    via_np = clustering.assign_clusters(df, cents).select(
-        "vec_id", "cluster", "dist2"
-    )
-    best = clustering.nearest_centroid(F.col("embedding"), cents)
-    via_lit = df.select(
-        "vec_id", best["cid"].alias("cluster"), best["d"].alias("dist2")
-    )
-    a = {r["vec_id"]: (r["cluster"], r["dist2"]) for r in via_np.collect()}
-    b = {r["vec_id"]: (r["cluster"], r["dist2"]) for r in via_lit.collect()}
-    assert a == b  # exact: same cluster ids AND bit-equal distances
-    df.unpersist()
 
 
 @pytest.mark.parametrize("dup_every", [0, 4])
@@ -133,25 +113,3 @@ def test_np_drop_kernel_matches_catalyst_self_join(spark):
     }
     assert got == want and len(got) > 0
     e.unpersist()
-
-
-def test_multi_encode_empty_batch_and_null_guards(spark):
-    """r9 advice: np.stack raises on a zero-row Arrow batch (plausible on
-    streaming foreachBatch partitions) and object-stacks NULLs into an
-    opaque failure — the kernel must return a typed empty frame for the
-    former and fail fast with the real cause for the latter."""
-    import pandas as pd
-
-    cents = {0: [0.0, 0.0], 1: [1.0, 1.0]}
-    fn = clustering.multi_encode_np({"c": (cents, None)}, with_dist=True).func
-
-    out = fn(pd.Series([], dtype=object))
-    assert list(out.columns) == ["c", "c_d"]
-    assert len(out) == 0
-    assert str(out["c"].dtype) == "int32" and str(out["c_d"].dtype) == "float64"
-
-    with pytest.raises(ValueError, match="NULL embedding"):
-        fn(pd.Series([[0.1, 0.2], None], dtype=object))
-
-    ok = fn(pd.Series([[0.1, 0.2], [0.9, 1.1]], dtype=object))
-    assert list(ok["c"]) == [0, 1]

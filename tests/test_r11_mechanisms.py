@@ -1,18 +1,14 @@
-"""Round-11 mechanism pins: the midpoint-ulp rounding-divergence
-witness (why cross-path assignment equality is fixture-attested, not
-universal), the conflict-safe MinHash fold, the canonical bench_full
-routing, the gated per-row-cost baseline roll, the row-blocked cosine
-kernel, and the two-level SemDeDup fit (grouped rank-mod seeds +
-per-cell assignment — the sf1→sf10 slope fix, BASELINE §x)."""
+"""Round-11 mechanism pins: the conflict-safe MinHash fold, the
+canonical bench_full routing, the gated per-row-cost baseline roll, the
+row-blocked cosine kernel and the two-level SemDeDup fit's parity with
+per-cell fits. (The round's other clustering pins live in
+tests/test_clustering.py.)"""
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import sys
-
-import pyspark.sql.functions as F
 
 import bench
 
@@ -20,72 +16,6 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
 )
 from sf1_slopes import roll_per_row_baseline  # noqa: E402
-
-
-# ---------------------------------------------------------------- ulp witness
-
-#: diff whose SQUARE (0.0001255, shortest decimal repr ends in 5) rounds
-#: DOWN under the kernel's floor(d*1e6+0.5)/1e6 (d*1e6 computes a hair
-#: under 125.5 in binary) but UP under the literal path's F.round
-#: (HALF_UP on the shortest decimal repr) — the exact divergence class
-#: the _assign_np_udf CAVEAT documents. Found by ulp-scan around
-#: sqrt((k+0.5)e-6) midpoints.
-WITNESS_X = 0.011202678251204039
-
-
-def test_midpoint_ulp_witness_flips_argmin_across_paths(spark):
-    """A vector within an ulp of a .5e-6 distance midpoint assigns to
-    DIFFERENT clusters on the literal vs the numpy path — the counter-
-    example pinning that 'identical assignment' is an attested-on-this-
-    data claim, never a universal one (r10 verdict item 3)."""
-    from backend_etl_spark.operators.clustering import (
-        _assign_np_udf,
-        nearest_centroid,
-    )
-
-    x = WITNESS_X
-    d_witness = x * x
-    # kernel rounding vs decimal HALF_UP genuinely diverge on it
-    assert math.floor(d_witness * 1e6 + 0.5) / 1e6 == 0.000125
-    assert repr(d_witness) == "0.0001255"  # shortest repr → HALF_UP 0.000126
-    # centroid 0 sits at an unambiguous 0.000126 distance² (both
-    # roundings agree); centroid 1 at the witness distance². Kernel:
-    # 0.000125 < 0.000126 → cluster 1. Literal: tie at 0.000126 →
-    # lowest cid → cluster 0.
-    c0 = x - math.sqrt(0.0001258)
-    centroids = {0: [c0], 1: [0.0]}
-    df = spark.createDataFrame([([x],)], "embedding array<double>")
-
-    lit = df.select(
-        nearest_centroid(F.col("embedding"), centroids)["cid"].alias("cid")
-    ).first()["cid"]
-    kern = df.select(
-        _assign_np_udf(centroids)(F.col("embedding"))["cid"].alias("cid")
-    ).first()["cid"]
-    assert lit == 0 and kern == 1, (
-        f"expected the documented divergence (literal 0, kernel 1); "
-        f"got literal={lit} kernel={kern}"
-    )
-
-
-def test_paths_agree_away_from_midpoints(spark):
-    """Control: one ulp-class away from the midpoint the two paths agree
-    — the divergence is the midpoint class, not a broken kernel."""
-    from backend_etl_spark.operators.clustering import (
-        _assign_np_udf,
-        nearest_centroid,
-    )
-
-    x = 0.0112  # d² = 1.2544e-4, nowhere near a .5e-6 midpoint
-    centroids = {0: [x - math.sqrt(0.0001258)], 1: [0.0]}
-    df = spark.createDataFrame([([x],)], "embedding array<double>")
-    lit = df.select(
-        nearest_centroid(F.col("embedding"), centroids)["cid"].alias("cid")
-    ).first()["cid"]
-    kern = df.select(
-        _assign_np_udf(centroids)(F.col("embedding"))["cid"].alias("cid")
-    ).first()["cid"]
-    assert lit == kern == 1
 
 
 # ------------------------------------------------------ conflict-safe minhash
@@ -263,17 +193,20 @@ def test_blocked_cosine_kernel_matches_unblocked(spark, monkeypatch):
 
 
 def test_grouped_fit_equals_individual_fits_on_rank_remapped_ids(spark):
-    """kmeans_fit_grouped (rank_mod seeds) over a tagged frame must equal
-    an individual kmeans_fit per cell with ids remapped to the cell-local
-    rank (rank_mod on real ids == id_mod on contiguous rank ids) — the
-    parity that makes the hierarchical semdedup oracle mirrorable."""
+    """kmeans_fit_grouped (rank-strided seeds) over a tagged frame must
+    equal an individual kmeans_fit per cell with ids remapped to the
+    cell-local rank (rank striding on real ids == id striding on
+    contiguous rank ids) — the parity that makes the hierarchical
+    semdedup oracle mirrorable."""
     import numpy as np
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
     from backend_etl_spark.operators import clustering as C
 
     rng = np.random.default_rng(7)
     # non-contiguous, interleaved ids across 3 cells — the case where
-    # global id_mod striding could seed a cell EMPTY
+    # global id striding could seed a cell EMPTY
     rows = [
         (int(1000 + 7 * i), int(i % 3), [float(x) for x in rng.normal(0, 1, 4)])
         for i in range(90)
@@ -281,9 +214,6 @@ def test_grouped_fit_equals_individual_fits_on_rank_remapped_ids(spark):
     df = spark.createDataFrame(rows, "vec_id long, cell int, embedding array<double>")
 
     got = C.kmeans_fit_grouped(df, "cell", lambda n: max(2, n // 10), iters=3)
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
     want = {}
     for c in (0, 1, 2):
@@ -295,35 +225,6 @@ def test_grouped_fit_equals_individual_fits_on_rank_remapped_ids(spark):
         n = sub.count()
         want[c] = C.kmeans_fit(remapped, k=max(2, n // 10), iters=3)
     assert got == want
-
-
-def test_assign_clusters_multi_matches_per_cell_assign(spark):
-    """assign_clusters_multi must assign every row exactly as
-    assign_clusters would against its own cell's centroids."""
-    import numpy as np
-
-    from backend_etl_spark.operators import clustering as C
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(13)
-    rows = [
-        (int(i), int(i % 2), [float(x) for x in rng.normal(0, 1, 4)])
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, cell int, embedding array<double>")
-    cents = {
-        0: {i: [float(x) for x in rng.normal(0, 1, 4)] for i in range(3)},
-        # >= NP_ASSIGN_MIN_K so this tag rides the numpy kernel path
-        1: {i: [float(x) for x in rng.normal(0, 1, 4)] for i in range(6)},
-    }
-    got = {
-        r["vec_id"]: r["cluster"]
-        for r in C.assign_clusters_multi(df, cents, tag_col="cell").collect()
-    }
-    for c in (0, 1):
-        sub = C.assign_clusters(df.where(F.col("cell") == c), cents[c])
-        for r in sub.collect():
-            assert got[r["vec_id"]] == r["cluster"], (c, r["vec_id"])
 
 
 def test_roll_history_refused_on_degraded_run():
