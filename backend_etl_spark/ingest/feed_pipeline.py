@@ -12,10 +12,11 @@ watermark advances only when rows landed (tasks.py:198-199).
 from __future__ import annotations
 
 import datetime as dt
+import json
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from backend_etl_spark.ingest import projections, schemas
@@ -134,13 +135,14 @@ def ingest_feed_fleet(
     max_items: int | None = None,
 ) -> dict:
     """One scheduler tick for the WHOLE fleet of one platform: every
-    eligible (tenant, feed) lands through a single plan — per-tenant feed
-    reads unioned, the users dim + watermark table broadcast-joined on,
-    one projection, one window filter, one idempotent write, one
-    watermark advance. O(1) Spark jobs regardless of tenant count (the
-    reference fans out one Celery task per tenant, tasks.py:80-101; the
-    round-1 per-tenant loop here cost 3 jobs + a watermark-table scan
-    PER tenant).
+    eligible (tenant, feed) lands through a single plan — one connector
+    load over all eligible tenants' feed dirs, the users dim + watermark
+    table broadcast-joined on, one projection, one window filter, one
+    idempotent write, one watermark advance. The tick's actions are the
+    control-table collect, the write and the advance, whatever the
+    tenant count (the reference fans out one Celery task per tenant,
+    tasks.py:80-101; the round-1 per-tenant loop here cost 3 jobs + a
+    watermark-table scan PER tenant).
 
     Semantics:
     - P10 dispatch guard: tenants whose platform handle is NULL on the
@@ -156,8 +158,6 @@ def ingest_feed_fleet(
 
     Returns {"appended": total_rows, "advanced": [tenant_ids]}.
     """
-    import functools
-
     spec = FEEDS[platform]
     spark.dataSource.register(FixtureFeedDataSource)
     handle_col = schemas.HANDLE_COLS[platform]
@@ -169,32 +169,35 @@ def ingest_feed_fleet(
         .select("tenant_id", "watermark")
     )
     dim_cols = [c for c in _DIM_KEYS if c in users.columns]
-    # control table: tiny (|tenants|); materialized so the advance's
-    # directory swap cannot invalidate the in-flight batch plan
-    ctl = (
+    # control table: tiny (|tenants|); collected and rebuilt as a local
+    # relation so the advance's directory swap cannot invalidate the
+    # in-flight batch plan. `since` travels as epoch micros: a Python
+    # datetime round trip is lossy in a DST fold hour.
+    ctl_src = (
         eligible.select(F.col("id").alias("tenant_id"), *dim_cols)
         .join(F.broadcast(wm), "tenant_id", "left")
-        .withColumn(
-            "since", F.coalesce(F.col("watermark"), F.lit(as_of - CATCHUP_WINDOW))
+        .select(
+            "tenant_id",
+            *dim_cols,
+            F.unix_micros(
+                F.coalesce(F.col("watermark"), F.lit(as_of - CATCHUP_WINDOW))
+            ).alias("since"),
         )
-        .drop("watermark")
-        .localCheckpoint(eager=True)
     )
-    eligible_ids = {r["tenant_id"] for r in ctl.select("tenant_id").collect()}
-
-    readers = []
-    for tid, feed_dir in feeds.items():
-        if tid not in eligible_ids:
-            continue  # P10: no handle → no fetch
-        reader = spark.read.format("fixture_feed").option("path", feed_dir)
-        if max_items:
-            reader = reader.option("max_items", str(max_items))
-        readers.append(reader.load().select(F.lit(tid).alias("tenant_id"), "item"))
-    if not readers:
+    ctl_rows = ctl_src.collect()
+    eligible_ids = {r["tenant_id"] for r in ctl_rows}
+    # P10: no handle → no fetch
+    paths = {tid: d for tid, d in feeds.items() if tid in eligible_ids}
+    if not paths:
         return {"appended": 0, "advanced": []}
-    raw_all = functools.reduce(lambda a, b: a.unionByName(b), readers)
+    ctl = spark.createDataFrame(ctl_rows, ctl_src.schema).withColumn(
+        "since", F.timestamp_micros("since")
+    )
 
-    typed = raw_all.select(
+    reader = spark.read.format("fixture_feed").option("paths", json.dumps(paths))
+    if max_items:
+        reader = reader.option("max_items", str(max_items))
+    typed = reader.load().select(
         "tenant_id", F.from_json("item", spec.raw_ddl).alias("r")
     ).select("tenant_id", "r.*")
     enriched = typed.join(F.broadcast(ctl), "tenant_id")
@@ -209,19 +212,23 @@ def ingest_feed_fleet(
         ts = spec.event_ts()
         stamped = stamped.where((ts > F.col("since")) & (ts <= F.lit(as_of)))
 
-    landed = [r["tenant_id"] for r in stamped.groupBy("tenant_id").count().collect()]
+    # the landed-tenant set rides the write action; observed before the
+    # sink's dedup, so duplicates count towards the advance
+    landed_obs = Observation()
+    stamped = stamped.observe(landed_obs, F.collect_set("tenant_id").alias("landed"))
     n = write_idempotent(
         stamped.drop("tenant_id", "since"),
         sink_path,
         schemas.DEDUP_KEYS[spec.table],
     )
+    landed = sorted(landed_obs.get["landed"])
     if landed:
         state.advance(
             spark.createDataFrame(
                 [(t, platform, as_of) for t in landed], WatermarkStore.SCHEMA
             )
         )
-    return {"appended": n, "advanced": sorted(landed)}
+    return {"appended": n, "advanced": landed}
 
 
 def ingest_feed(

@@ -102,7 +102,7 @@ def release_all_persistent(spark: SparkSession) -> None:
         while it.hasNext():
             it.next().unpersist(False)
     except Exception:
-        pass
+        pass  # best-effort: a leaked block is a perf hazard, never a wrong result
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -12,8 +12,9 @@ optimizations implemented connector-side, where they belong
 - `since`/`until` time-window pushdown (the `since:.. until:..` query
   the reference embeds in the Apify search string),
 - `max_items` limit pushdown (maxItems/resultsLimit caps),
-- one InputPartition per page → pages read in parallel across
-  executors (the reference's page loop was serial per task).
+- one InputPartition per page (per tenant and page under `paths`) →
+  pages read in parallel across executors (the reference's page loop
+  was serial per task).
 
 Items are emitted as raw JSON strings; schema-on-read happens in the
 plan via from_json (N6) — the connector moves bytes, the engine owns
@@ -28,6 +29,13 @@ Usage:
           .option("since", "2023-01-01T00:00:00")
           .option("max_items", "500")
           .load())                            # -> (page INT, item STRING)
+
+    # a whole fleet in one scan: one partition per (tenant, page), the
+    # max_items budget charged per tenant
+    df = (spark.read.format("fixture_feed")
+          .option("paths", json.dumps({tenant_id: feed_dir, ...}))
+          .option("max_items", "500")
+          .load())                # -> (tenant_id BIGINT, page INT, item STRING)
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ import time
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 FEED_SCHEMA = "page INT, item STRING"
+FLEET_FEED_SCHEMA = "tenant_id BIGINT, " + FEED_SCHEMA
 
 
 class TransientFeedError(IOError):
@@ -68,22 +77,25 @@ class FixtureFeedDataSource(DataSource):
         return "fixture_feed"
 
     def schema(self) -> str:
-        return FEED_SCHEMA
+        return FLEET_FEED_SCHEMA if "paths" in self.options else FEED_SCHEMA
 
     def reader(self, schema) -> "FixtureFeedReader":
         return FixtureFeedReader(self.options)
 
 
 class _PagePartition(InputPartition):
-    def __init__(self, page: int, path: str, budget: int):
-        self.page = page
+    def __init__(self, key: tuple, path: str, budget: int):
+        self.key = key  # (page,) or (tenant_id, page): the row's leading columns
         self.path = path
         self.budget = budget
 
 
 class FixtureFeedReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = options["path"]
+        if "paths" in options:
+            self.dirs = {(int(t),): d for t, d in json.loads(options["paths"]).items()}
+        else:
+            self.dirs = {(): options["path"]}
         self.ts_key = options.get("ts_key")
         self.since = options.get("since")
         self.until = options.get("until")
@@ -123,23 +135,30 @@ class FixtureFeedReader(DataSourceReader):
         return True
 
     def partitions(self):
+        return [
+            p for tenant, d in self.dirs.items() for p in self._dir_partitions(tenant, d)
+        ]
+
+    def _dir_partitions(self, tenant: tuple, feed_dir: str) -> list[_PagePartition]:
         pages = sorted(
-            f for f in os.listdir(self.path) if f.endswith((".json", ".jsonl"))
+            f for f in os.listdir(feed_dir) if f.endswith((".json", ".jsonl"))
         )
-        # limit pushdown across pages: later pages get the leftover budget
-        # (page size is the cap the remote API enforces; the budget is
-        # ours). The budget is charged per EMITTED row — blank lines and
-        # rows the since/until pushdown drops don't consume it, so with a
-        # time filter active later pages still get their full share.
+        # limit pushdown across one feed's pages: later pages get the
+        # leftover budget (page size is the cap the remote API enforces;
+        # the budget is ours). The budget is charged per EMITTED row —
+        # blank lines and rows the since/until pushdown drops don't
+        # consume it, so with a time filter active later pages still get
+        # their full share.
         parts = []
         remaining = self.max_items
         for i, fname in enumerate(pages):
             if remaining is not None and remaining <= 0:
                 break
             budget = -1 if remaining is None else remaining
-            parts.append(_PagePartition(i, os.path.join(self.path, fname), budget))
+            path = os.path.join(feed_dir, fname)
+            parts.append(_PagePartition((*tenant, i), path, budget))
             if remaining is not None:
-                with open(os.path.join(self.path, fname)) as fh:
+                with open(path) as fh:
                     remaining -= sum(1 for line in fh if self._emits(line))
         return parts
 
@@ -165,7 +184,7 @@ class FixtureFeedReader(DataSourceReader):
                     continue
                 if partition.budget >= 0 and emitted >= partition.budget:
                     break
-                out.append((partition.page, line.strip()))
+                out.append((*partition.key, line.strip()))
                 emitted += 1
         return out
 

@@ -4,6 +4,11 @@ queries — shuffle counts, broadcast placement, pushed filters, scan
 widths — plus the full formatted plan for the flagship queries.
 
 Run: python scripts/dump_plans.py [sf_dir]   (default sf0.01)
+
+The session runs on local[32], the core count the catalog is
+benchmarked at, whatever the host: some plans
+(`operators/partitioning.spread`) depend on the default parallelism,
+so an unpinned audit would differ between hosts.
 """
 
 from __future__ import annotations
@@ -131,6 +136,9 @@ HEADLINE = [
     "knn_cosine_range_search",
 ]
 
+#: the catalog's benchmark core count; pinned so the audit is host-independent
+AUDIT_CPUS = "32"
+
 FULL_PLAN = ["q3_shipping_priority", "dedup_minhash_signatures", "knn_brute_force_cosine"]
 
 
@@ -146,13 +154,15 @@ def audit_names() -> list[str]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    os.environ["SPARK_GRAFT_CPUS"] = AUDIT_CPUS
     spark = get_spark("plan-audit")
 
     names = audit_names()
     lines = [
         "# PLANS — physical-plan audit of the full catalog",
         "",
-        f"Generated by `scripts/dump_plans.py` against `{sf_dir}`;",
+        f"Generated by `scripts/dump_plans.py` against `{sf_dir}` on",
+        f"`local[{AUDIT_CPUS}]`;",
         f"{len(names)} entries (every registry entry except the",
         "`streaming_*` drains, whose per-batch plans are the batch",
         "entries they reuse).",

@@ -107,6 +107,97 @@ def test_fleet_all_tenants_handleless_is_noop(spark, tmp_path):
     assert state.get(5, "twitter") is None
 
 
+def _feed(tmp_path, name: str, items: list[str]) -> str:
+    d = tmp_path / name
+    d.mkdir()
+    (d / "page_0000.jsonl").write_text("\n".join(items))
+    return str(d)
+
+
+def test_fleet_advances_tenant_whose_items_are_all_duplicates(spark, users, tmp_path):
+    """The advance counts in-window items processed, duplicates included:
+    a tick whose every item is already in the sink appends nothing but
+    still advances the tenant."""
+    feeds = {1: _feed(tmp_path, "tw_1", [_twitter_item(i) for i in range(3)])}
+    sink = str(tmp_path / "sink")
+    first = WatermarkStore(spark, str(tmp_path / "wm_first"))
+    assert ingest_feed_fleet(spark, "twitter", feeds, sink, first, users, AS_OF) == {
+        "appended": 3, "advanced": [1]}
+
+    fresh = WatermarkStore(spark, str(tmp_path / "wm_fresh"))
+    out = ingest_feed_fleet(spark, "twitter", feeds, sink, fresh, users, AS_OF)
+    assert out == {"appended": 0, "advanced": [1]}
+    assert fresh.get(1, "twitter") == AS_OF
+    assert spark.read.parquet(sink).count() == 3
+
+
+def test_fleet_does_not_advance_tenant_with_nothing_after_watermark(spark, users, tmp_path):
+    """Items at or before the watermark are out of the window, so the
+    write's input is empty: no rows, no advance, and the landed-tenant
+    observation still reports (an empty set) instead of blocking."""
+    wm = dt.datetime(2023, 11, 13, 22, 13, 20)  # == the newer item's ts
+    state = WatermarkStore(spark, str(tmp_path / "wm"))
+    state.advance(spark.createDataFrame([(1, "twitter", wm)], WatermarkStore.SCHEMA))
+    feeds = {1: _feed(tmp_path, "tw_1", [
+        _twitter_item(1), _twitter_item(2, "Sun Nov 12 08:00:00 +0000 2023")])}
+    out = ingest_feed_fleet(
+        spark, "twitter", feeds, str(tmp_path / "sink"), state, users, AS_OF
+    )
+    assert out == {"appended": 0, "advanced": []}
+    assert state.get(1, "twitter") == wm
+
+
+def test_fleet_skips_feed_of_tenant_missing_from_users(spark, users, tmp_path):
+    """A feed whose tenant is not in the users dim is never read: its
+    directory does not even exist, which the connector would raise on."""
+    feeds = {
+        1: _feed(tmp_path, "tw_1", [_twitter_item(1)]),
+        9: str(tmp_path / "absent"),
+    }
+    state = WatermarkStore(spark, str(tmp_path / "wm"))
+    out = ingest_feed_fleet(
+        spark, "twitter", feeds, str(tmp_path / "sink"), state, users, AS_OF
+    )
+    assert out == {"appended": 1, "advanced": [1]}
+    assert state.get(9, "twitter") is None
+
+
+def test_connector_paths_caps_each_tenant_independently(spark, tmp_path):
+    """The fleet form reads every tenant's pages in one load, leads each
+    row with its tenant_id and charges max_items per tenant."""
+    big = tmp_path / "big"
+    big.mkdir()
+    for p in range(2):
+        (big / f"page_{p:04d}.jsonl").write_text(
+            "\n".join(json.dumps({"id": p * 10 + i}) for i in range(3))
+        )
+    small = _feed(tmp_path, "small", [json.dumps({"id": i}) for i in range(2)])
+    spark.dataSource.register(FixtureFeedDataSource)
+    df = (
+        spark.read.format("fixture_feed")
+        .option("paths", json.dumps({7: str(big), 8: small}))
+        .option("max_items", "4")
+        .load()
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("tenant_id", "bigint"), ("page", "int"), ("item", "string")]
+    got = sorted((r["tenant_id"], r["page"], json.loads(r["item"])["id"])
+                 for r in df.collect())
+    assert got == [(7, 0, 0), (7, 0, 1), (7, 0, 2), (7, 1, 10), (8, 0, 0), (8, 0, 1)]
+
+
+def test_connector_path_schema_is_page_item(spark, tmp_path):
+    spark.dataSource.register(FixtureFeedDataSource)
+    df = (
+        spark.read.format("fixture_feed")
+        .option("path", _feed(tmp_path, "feed", [json.dumps({"id": 1})]))
+        .load()
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("page", "int"), ("item", "string")]
+    assert [(r["page"], r["item"]) for r in df.collect()] == [(0, '{"id": 1}')]
+
+
 def test_connector_bounded_retry_recovers(spark, tmp_path):
     """W6: a page that fails its first two reads succeeds within the
     retry budget — at-least-once delivery, full row set."""
