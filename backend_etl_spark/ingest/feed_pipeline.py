@@ -18,6 +18,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from backend_etl_spark.ingest import projections, schemas
 from backend_etl_spark.sink import WatermarkStore, write_idempotent
@@ -138,11 +139,12 @@ def ingest_feed_fleet(
     eligible (tenant, feed) lands through a single plan — one connector
     load over all eligible tenants' feed dirs, the users dim + watermark
     table broadcast-joined on, one projection, one window filter, one
-    idempotent write, one watermark advance. The tick's actions are the
-    control-table collect, the write and the advance, whatever the
-    tenant count (the reference fans out one Celery task per tenant,
+    idempotent write, one watermark advance. The tick's Spark actions
+    are the control-table collect and the write, whatever the tenant
+    count: the landed set rides the write, and the advance merges on the
+    driver. (The reference fans out one Celery task per tenant,
     tasks.py:80-101; the round-1 per-tenant loop here cost 3 jobs + a
-    watermark-table scan PER tenant).
+    watermark-table scan PER tenant.)
 
     Semantics:
     - P10 dispatch guard: tenants whose platform handle is NULL on the
@@ -169,10 +171,10 @@ def ingest_feed_fleet(
         .select("tenant_id", "watermark")
     )
     dim_cols = [c for c in _DIM_KEYS if c in users.columns]
-    # control table: tiny (|tenants|); collected and rebuilt as a local
-    # relation so the advance's directory swap cannot invalidate the
-    # in-flight batch plan. `since` travels as epoch micros: a Python
-    # datetime round trip is lossy in a DST fold hour.
+    # control table: tiny (|tenants|); collected for the eligible set and
+    # rebuilt as a local relation, so the write does not re-run the
+    # control join. `since` travels as epoch micros: a Python datetime
+    # round trip is lossy in a DST fold hour.
     ctl_src = (
         eligible.select(F.col("id").alias("tenant_id"), *dim_cols)
         .join(F.broadcast(wm), "tenant_id", "left")
@@ -222,12 +224,8 @@ def ingest_feed_fleet(
         schemas.DEDUP_KEYS[spec.table],
     )
     landed = sorted(landed_obs.get["landed"])
-    if landed:
-        state.advance(
-            spark.createDataFrame(
-                [(t, platform, as_of) for t in landed], WatermarkStore.SCHEMA
-            )
-        )
+    as_of_us = TimestampType().toInternal(as_of)
+    state.advance((t, platform, as_of_us) for t in landed)
     return {"appended": n, "advanced": landed}
 
 
@@ -331,10 +329,7 @@ def stream_ingest_feed(
             projected = projected.where((ts > F.lit(since)) & (ts <= F.lit(as_of)))
         n = write_idempotent(projected, sink_path, schemas.DEDUP_KEYS[spec.table])
         if n:
-            landed = batch.sparkSession.createDataFrame(
-                [(tenant["id"], platform, as_of)], WatermarkStore.SCHEMA
-            )
-            state.advance(landed)
+            state.advance([(tenant["id"], platform, TimestampType().toInternal(as_of))])
 
     (
         spark.readStream.format("fixture_feed")

@@ -117,5 +117,7 @@ def tune(spark: SparkSession) -> SparkSession:
         try:
             spark.conf.set(k, v)
         except Exception:
+            # a static or unknown conf on the caller's session: the rest
+            # still apply, and none of the skippable ones changes a result
             pass
     return spark

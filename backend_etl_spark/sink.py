@@ -16,7 +16,11 @@ Scale notes: the anti-join reads only the key columns of the sink
 (column-pruned parquet scan). At 100 TB the sink would be partitioned by
 ingest date so the anti-join prunes to recent partitions; with an ACID
 table format this collapses into MERGE. The state table is tiny
-(|tenants| × |platforms|) and rewritten atomically via write-new+swap.
+(|tenants| × |platforms|), so its merge runs on the driver: pyarrow
+reads the one file, folds the updates in with max-per-key and writes a
+fresh copy that is swapped in atomically (write-new+swap). No Spark job
+runs for it, the way Spark's own streaming offset log is driver-written
+metadata; Spark still reads the table (``read``/``get``).
 """
 
 from __future__ import annotations
@@ -24,8 +28,11 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -76,6 +83,32 @@ def write_idempotent(
       unchanged; only duplicate keys WITHIN one asserted batch would
       slip through.
     """
+    batch = new_rows(df, path, key_cols, prune, assume_unique)
+    # rows-appended metric rides the write action itself (Observation =
+    # accumulator-backed, SURVEY §2.6 A1's per-task count) — one pass,
+    # no persist, no second job. An all-duplicate batch writes an empty
+    # parquet commit, which the next read treats as zero rows.
+    obs = Observation()
+    batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
+    writer = batch.write.mode("append")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(path)
+    return obs.get["n"]
+
+
+def new_rows(
+    df: DataFrame,
+    path: str,
+    key_cols: list[str],
+    prune=None,
+    assume_unique: bool = False,
+) -> DataFrame:
+    """The dedup half of ``write_idempotent``: the rows of ``df`` whose
+    natural key is neither repeated earlier in the batch nor already in
+    the sink at ``path`` (``prune`` and ``assume_unique`` as there).
+    Lazy; for callers that observe or drop columns before their own
+    append."""
     spark = df.sparkSession
     batch = df if assume_unique else df.dropDuplicates(key_cols)
     if _sink_exists(path):
@@ -99,17 +132,7 @@ def write_idempotent(
             c = F.col(f"__sink_in.{k}").eqNullSafe(F.col(f"__sink_ex.{k}"))
             cond = c if cond is None else cond & c
         batch = b.join(ex, cond, "left_anti")
-    # rows-appended metric rides the write action itself (Observation =
-    # accumulator-backed, SURVEY §2.6 A1's per-task count) — one pass,
-    # no persist, no second job. An all-duplicate batch writes an empty
-    # parquet commit, which the next read treats as zero rows.
-    obs = Observation()
-    batch = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-    writer = batch.write.mode("append")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-    return obs.get["n"]
+    return batch
 
 
 def compact_sink(
@@ -134,6 +157,13 @@ def compact_sink(
     shutil.rmtree(path)
     os.rename(tmp, path)
     return before, len(_data_files(path))
+
+
+_ARROW_TS = pa.timestamp("us", tz="UTC")
+#: the file layout of WatermarkStore.SCHEMA, as Spark reads it back
+_ARROW_SCHEMA = pa.schema(
+    [("tenant_id", pa.int64()), ("platform", pa.string()), ("watermark", _ARROW_TS)]
+)
 
 
 class WatermarkStore:
@@ -162,35 +192,62 @@ class WatermarkStore:
         )
         return rows[0]["watermark"] if rows else None
 
-    def advance(self, updates: DataFrame) -> None:
-        """Merge (tenant_id, platform, watermark) updates, keeping the max
-        watermark per key. Atomic-ish: write to a fresh dir, then swap."""
+    def advance(self, rows: Iterable[tuple[int, str, int | None]]) -> None:
+        """Merge ``(tenant_id, platform, watermark_us)`` rows into the
+        table, keeping the max watermark per key; a NULL never beats a
+        value. ``watermark_us`` is UTC epoch micros: a caller holding a
+        datetime converts it with ``TimestampType().toInternal``, the
+        rule ``createDataFrame`` applies. An empty ``rows`` writes
+        nothing. Atomic-ish: write to a fresh dir, then swap, so a plan
+        that still reads the old dir must have run before this call."""
+        rows = list(rows)
+        if not rows:
+            return
+        tenant_id, platform, watermark = zip(*rows)
+        parts = [
+            pa.table(
+                [
+                    pa.array(tenant_id, pa.int64()),
+                    pa.array(platform, pa.string()),
+                    pa.array(watermark, pa.int64()).cast(_ARROW_TS),
+                ],
+                schema=_ARROW_SCHEMA,
+            )
+        ]
+        # Spark writes INT96 or TIMESTAMP_MICROS; both hold UTC instants
+        for f in _data_files(self.path):
+            t = pq.read_table(f, coerce_int96_timestamp_unit="us")
+            parts.append(t.select(_ARROW_SCHEMA.names).cast(_ARROW_SCHEMA))
         merged = (
-            self.read()
-            .unionByName(updates.select("tenant_id", "platform", "watermark"))
-            .groupBy("tenant_id", "platform")
-            .agg(F.max("watermark").alias("watermark"))
+            pa.concat_tables(parts)
+            .group_by(["tenant_id", "platform"])
+            .aggregate([("watermark", "max")])  # skips NULLs
+            .select(["tenant_id", "platform", "watermark_max"])
+            .rename_columns(_ARROW_SCHEMA.names)
         )
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+        os.makedirs(tmp)
+        pq.write_table(merged, os.path.join(tmp, "part-00000.parquet"))
         if os.path.isdir(self.path):
             shutil.rmtree(self.path)
         os.rename(tmp, self.path)
 
 
-def apply_retention(spark: SparkSession, path: str, keep) -> tuple[int, int]:
+def apply_retention(spark: SparkSession, path: str, keep: Column) -> tuple[int, int]:
     """Retention / targeted delete on an append-only parquet sink: keep
     only rows matching ``keep``, rewriting atomically (write-new+swap).
     The GDPR-delete / TTL maintenance operator — append-only ingest plus
     periodic rewrite-excluding is the parquet-native answer to DELETE
     (an ACID table format turns this into a metadata operation).
-    Returns (rows_before, rows_after)."""
-    df = spark.read.parquet(path)
-    before = df.count()
-    kept = df.where(keep)
+    Returns (rows_before, rows_after), both observed on the rewrite."""
+    obs = Observation()
+    kept = (
+        spark.read.parquet(path)
+        .observe(obs, F.count(F.lit(1)).alias("before"), F.count_if(keep).alias("after"))
+        .where(keep)
+    )
     tmp = f"{path}.retain-{uuid.uuid4().hex[:8]}"
     kept.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)
-    after = spark.read.parquet(path).count()
-    return before, after
+    return obs.get["before"], obs.get["after"]

@@ -283,6 +283,8 @@ def main() -> None:
             try:
                 run(warm)
             except Exception:
+                # warm-up only primes caches; a broken entry fails again,
+                # and is recorded, when the timed loop runs it
                 pass
 
     def recycle() -> None:
@@ -301,6 +303,8 @@ def main() -> None:
         try:
             spark.stop()
         except Exception:
+            # an already-dead context cannot be stopped; get_spark below
+            # replaces it either way, and its failure is reported
             pass
         last_err: Exception | None = None
         for attempt in range(3):
@@ -387,6 +391,8 @@ def main() -> None:
                 if str(rec.get("sf")) == str(float(sf)):
                     baselines[tag] = rec.get("queries", {})
             except Exception:
+                # a missing or malformed baseline file only means no
+                # adjudication against it; the in-run numbers stand
                 pass
         movers: dict[str, list[str]] = {}
         for n, t in times.items():

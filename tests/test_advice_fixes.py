@@ -1,7 +1,8 @@
 """Regression tests for the round-1 ADVICE findings:
 
-1. mixed-tick watermark swap (pipeline.py): catchup's state.advance()
-   must not invalidate the general-mode plan in the same tick;
+1. mixed-tick watermark swap (pipeline.py): a tick with both modes
+   must advance both, and no plan may read the watermark dir after
+   state.advance() swaps it;
 2. rollup replay (streaming/rollup.py): a replayed foreachBatch batch
    must not double-count into the additive fold;
 3. NULL composite keys (sink.py): cross-batch anti-join must treat
@@ -15,6 +16,7 @@ import datetime as dt
 import json
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from backend_etl_spark.functions.scalars import tokens
 from backend_etl_spark.pipeline import run_incremental
@@ -48,8 +50,9 @@ def test_sink_null_key_not_reappended(spark, tmp_path):
 
 def test_mixed_tick_catchup_and_general(spark, tmp_path):
     """Tick with BOTH modes active: tenant 1 has a watermark (general),
-    tenant 2 is never-fetched (catchup). Catchup runs first and swaps
-    the watermark dir; general must still execute correctly."""
+    tenant 2 is never-fetched (catchup). Both modes land in one write
+    and advance in one merge that swaps the watermark dir; each tenant
+    must get its own window and watermark."""
     as_of = dt.datetime(2024, 6, 1)
     rows = []
     eid = 0
@@ -64,11 +67,7 @@ def test_mixed_tick_catchup_and_general(spark, tmp_path):
     )
     state = WatermarkStore(spark, str(tmp_path / "wm"))
     # tenant 1 fetched through May 7 already
-    state.advance(
-        spark.createDataFrame(
-            [(1, "events", dt.datetime(2024, 5, 7))], WatermarkStore.SCHEMA
-        )
-    )
+    state.advance([(1, "events", TimestampType().toInternal(dt.datetime(2024, 5, 7)))])
     counts = run_incremental(
         spark, source, str(tmp_path / "sink"), state, as_of
     )

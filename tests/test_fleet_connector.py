@@ -6,6 +6,7 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from backend_etl_spark.ingest.feed_pipeline import (
     _FLEET_USERS_DDL,
@@ -137,7 +138,7 @@ def test_fleet_does_not_advance_tenant_with_nothing_after_watermark(spark, users
     observation still reports (an empty set) instead of blocking."""
     wm = dt.datetime(2023, 11, 13, 22, 13, 20)  # == the newer item's ts
     state = WatermarkStore(spark, str(tmp_path / "wm"))
-    state.advance(spark.createDataFrame([(1, "twitter", wm)], WatermarkStore.SCHEMA))
+    state.advance([(1, "twitter", TimestampType().toInternal(wm))])
     feeds = {1: _feed(tmp_path, "tw_1", [
         _twitter_item(1), _twitter_item(2, "Sun Nov 12 08:00:00 +0000 2023")])}
     out = ingest_feed_fleet(

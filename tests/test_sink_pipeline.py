@@ -6,10 +6,14 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from backend_etl_spark.pipeline import run_incremental
 from backend_etl_spark.sink import WatermarkStore, write_idempotent
 from backend_etl_spark.sources.loader import load_table
+
+
+_us = TimestampType().toInternal  # datetime -> advance()'s epoch micros
 
 
 @pytest.fixture()
@@ -62,11 +66,11 @@ def test_watermark_store_roundtrip(spark, tmp_path):
     assert store.get(1, "events") is None  # never fetched → catchup path
     t1 = dt.datetime(2024, 1, 10)
     t2 = dt.datetime(2024, 1, 20)
-    store.advance(spark.createDataFrame([(1, "events", t1)], WatermarkStore.SCHEMA))
+    store.advance([(1, "events", _us(t1))])
     assert store.get(1, "events") == t1
     # advance keeps max, never regresses
-    store.advance(spark.createDataFrame([(1, "events", t2)], WatermarkStore.SCHEMA))
-    store.advance(spark.createDataFrame([(1, "events", t1)], WatermarkStore.SCHEMA))
+    store.advance([(1, "events", _us(t2))])
+    store.advance([(1, "events", _us(t1))])
     assert store.get(1, "events") == t2
 
 
@@ -268,3 +272,103 @@ def test_crash_between_write_and_advance_is_idempotent(spark, events, tmp_path):
         .count()
     )
     assert dupes == 0
+
+
+_EVENTS_DDL = (
+    "event_id BIGINT, user_id BIGINT, ts TIMESTAMP, event_type STRING, "
+    "value DOUBLE, props STRING"
+)
+
+
+def test_incremental_null_tenant_rows_land_nowhere(spark, tmp_path):
+    """Rows with a NULL tenant are never written and advance nothing."""
+    as_of = dt.datetime(2024, 6, 1)
+    source = spark.createDataFrame(
+        [(0, None, dt.datetime(2024, 5, 3), "view", 1.0, "{}"),
+         (1, 7, dt.datetime(2024, 5, 4), "view", 1.0, "{}")],
+        _EVENTS_DDL,
+    )
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    sink = str(tmp_path / "sink")
+    assert run_incremental(spark, source, sink, store, as_of) == {"catchup": 1, "general": 0}
+    assert [r["mention_id"] for r in spark.read.parquet(sink).collect()] == [1]
+    assert [(r["tenant_id"], r["watermark"]) for r in store.read().collect()] == [
+        (7, dt.datetime(2024, 5, 4))
+    ]
+
+
+def test_incremental_mixed_tick_catchup_all_duplicates(spark, tmp_path):
+    """Catchup tenant 2's rows are all in the sink already: catchup
+    appends 0 and tenant 2 stays un-advanced, while general tenant 1
+    lands rows and advances in the same tick."""
+    as_of = dt.datetime(2024, 6, 1)
+    rows = [
+        (0, 1, dt.datetime(2024, 5, 10), "view", 1.0, "{}"),
+        (1, 1, dt.datetime(2024, 5, 20), "view", 1.0, "{}"),
+        (2, 2, dt.datetime(2024, 5, 8), "click", 2.0, "{}"),
+        (3, 2, dt.datetime(2024, 5, 15), "click", 2.0, "{}"),
+    ]
+    source = spark.createDataFrame(rows, _EVENTS_DDL)
+    sink = str(tmp_path / "sink")
+    from backend_etl_spark.pipeline import _mentions_projection
+
+    write_idempotent(_mentions_projection(source.where("user_id = 2")), sink, ["mention_id"])
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    store.advance([(1, "events", _us(dt.datetime(2024, 5, 7)))])
+    counts = run_incremental(spark, source, sink, store, as_of)
+    assert counts == {"catchup": 0, "general": 2}
+    assert store.get(1, "events") == dt.datetime(2024, 5, 20)
+    assert store.get(2, "events") is None
+    assert spark.read.parquet(sink).count() == 4
+
+
+@pytest.mark.parametrize("encoding", ["INT96", "TIMESTAMP_MICROS"])
+def test_watermark_advance_merges_into_spark_written_table(spark, tmp_path, encoding):
+    """A table written by the Spark path (coalesce(1) parquet, either
+    timestamp encoding) is merged max-per-key; platforms stay isolated
+    and the result reads back with the store's schema."""
+    path = str(tmp_path / "wm")
+    key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, encoding)
+    try:
+        spark.createDataFrame(
+            [(1, "events", dt.datetime(2024, 1, 10)),
+             (1, "twitter", dt.datetime(2024, 1, 5)),
+             (2, "events", None)],
+            WatermarkStore.SCHEMA,
+        ).coalesce(1).write.parquet(path)
+    finally:
+        spark.conf.set(key, prev)
+    store = WatermarkStore(spark, path)
+    store.advance([
+        (1, "events", _us(dt.datetime(2024, 1, 20))),
+        (1, "events", _us(dt.datetime(2024, 1, 1))),
+        (2, "events", _us(dt.datetime(2024, 1, 3))),
+        (3, "events", None),
+    ])
+    got = {(r["tenant_id"], r["platform"]): r["watermark"] for r in store.read().collect()}
+    assert got == {
+        (1, "events"): dt.datetime(2024, 1, 20),
+        (1, "twitter"): dt.datetime(2024, 1, 5),  # other platform untouched
+        (2, "events"): dt.datetime(2024, 1, 3),
+        (3, "events"): None,
+    }
+    assert spark.read.parquet(path).schema.simpleString() == (
+        "struct<tenant_id:bigint,platform:string,watermark:timestamp>"
+    )
+
+
+def test_watermark_advance_null_and_empty_updates(spark, tmp_path):
+    """A NULL update never clears a value; an empty update list writes
+    nothing (no new file, no swap)."""
+    store = WatermarkStore(spark, str(tmp_path / "wm"))
+    store.advance([])
+    assert not (tmp_path / "wm").exists()
+    t1 = dt.datetime(2024, 1, 10)
+    store.advance([(1, "events", _us(t1))])
+    files = sorted(p.stat().st_ino for p in (tmp_path / "wm").iterdir())
+    store.advance([])
+    assert sorted(p.stat().st_ino for p in (tmp_path / "wm").iterdir()) == files
+    store.advance([(1, "events", None)])
+    assert store.get(1, "events") == t1
