@@ -786,16 +786,20 @@ def doc_rolling_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS from LSH candidate pairs: iterative min-label
-    propagation (the distributed connected-components recipe) until
-    fixpoint — cluster_id = min doc id in the component; keep that id,
-    drop the rest. The oracle computes the same components via a
-    recursive CTE (transitive closure + min)."""
+    """Near-dup CLUSTERS of the LSH candidate graph — cluster_id = min
+    doc id in the component; keep that id, drop the rest. The edges are
+    LSH bucket stars (each bucket's min id linked to its other members:
+    the components of the candidate pairs at ≤ bands × docs edges, no
+    band self-join); components come from a per-partition union-find
+    seed finished by min-label propagation, which exits after one
+    no-change round when the seed is exact. The oracle computes the
+    same components from the pairs via a recursive CTE (transitive
+    closure + min)."""
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, "doc_id", "text")
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id")
-    return dedup.cluster_components(pairs, docs.select("doc_id"), "doc_id")
+    edges = dedup.lsh_bucket_edges(sigs, "doc_id")
+    return dedup.cluster_components(edges, docs.select("doc_id"), "doc_id")
 
 
 @register(

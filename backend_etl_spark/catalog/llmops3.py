@@ -538,17 +538,19 @@ def dedup_keep_best_in_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster with the kept doc and member count; the drop set is every
     other member.
 
-    Scale shape: components via iterative min-label propagation
-    (1 equi-join/round, diameter-bounded); the policy itself is one
-    per-cluster window — partitioned, never global."""
+    Scale shape: components over LSH bucket stars (≤ bands × docs
+    edges, no band self-join), seeded by a per-partition union-find and
+    finished by min-label propagation (1 equi-join/round; one no-change
+    round when the seed is exact); the policy itself is one per-cluster
+    window — partitioned, never global."""
     tune(spark)
     from backend_etl_spark.operators import dedup
     from pyspark.sql.window import Window
 
     docs = load_table(spark, sf_dir, "documents")
     sigs = dedup.minhash_signatures(docs, "doc_id", "text")
-    pairs = dedup.lsh_candidate_pairs(sigs, "doc_id")
-    comp = dedup.cluster_components(pairs, docs.select("doc_id"), "doc_id")
+    edges = dedup.lsh_bucket_edges(sigs, "doc_id")
+    comp = dedup.cluster_components(edges, docs.select("doc_id"), "doc_id")
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_chars").desc(), F.col("doc_id")
     )

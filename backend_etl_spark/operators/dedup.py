@@ -15,13 +15,17 @@ Scale design:
 - LSH banding turns the O(n²) candidate-pair problem into a self-join on
   (band_id, band_value) buckets; at 100 TB the bucket join is the only
   quadratic term and is bounded by bucket size (tune bands/rows per
-  band for the recall/cost point you need).
+  band for the recall/cost point you need). Clustering needs no pairs:
+  each bucket's star (min id → members) has the same components at
+  ≤ bands × docs edges.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+from pyspark.sql.window import Window
 
 from backend_etl_spark.functions.scalars import normalize_text, tokens
 from backend_etl_spark.operators.partitioning import spread
@@ -176,42 +180,52 @@ def signature_bands(
     doc's shingle set for a band-colocated intersect — r11)."""
     assert num_hashes % rows_per_band == 0, "num_hashes must divide into bands"
     n_bands = num_hashes // rows_per_band
-    band_vals = [
-        F.concat_ws(
-            "|", *[F.col(f"mh{b * rows_per_band + k}") for k in range(rows_per_band)]
-        )
-        for b in range(n_bands)
-    ]
     return signatures.select(
         F.col(id_col),
         *[F.col(c) for c in carry],
         F.stack(
             F.lit(n_bands),
-            *[x for b, v in enumerate(band_vals) for x in (F.lit(str(b)), v)],
+            *[
+                x
+                for b in range(n_bands)
+                for x in (F.lit(str(b)), _band_value(b, rows_per_band))
+            ],
         ).alias("band_id", "band_value"),
     )
 
 
 def _band_value(b: int, rows_per_band: int) -> F.Column:
-    """Band b's bucket value: the concat of its rows_per_band signature
-    hashes — identical construction to signature_bands' melt."""
-    return F.concat_ws(
-        "|", *[F.col(f"mh{b * rows_per_band + k}") for k in range(rows_per_band)]
-    )
+    """Band b's bucket value: its rows_per_band signature hashes joined
+    by '|'. NULL when any of them is NULL (``concat``, not
+    ``concat_ws``, which would turn a NULL hash into '' and bucket every
+    NULL-hashed doc together): a NULL band buckets with nothing, as
+    ``band_value = band_value`` is never true for NULL in the oracles."""
+    parts = []
+    for k in range(rows_per_band):
+        if k:
+            parts.append(F.lit("|"))
+        parts.append(F.col(f"mh{b * rows_per_band + k}"))
+    return F.concat(*parts)
+
+
+def _band_shared(j: int) -> F.Column:
+    """Band j is a shared bucket of the pair: both values non-NULL and
+    equal (never NULL itself)."""
+    return F.coalesce(F.col(f"a.bv{j}") == F.col(f"b.bv{j}"), F.lit(False))
 
 
 def _first_shared_band(n_bands: int) -> F.Column:
     """True iff the band this collision row matched on (``band_id``) is
     the LOWEST-numbered band the two docs share — decided row-locally
-    from the carried per-doc band values (non-null md5 strings, so
-    plain != is safe). Keeping only these rows makes the band self-join
-    emit each candidate pair exactly once, with no pair-keyed dedup
-    shuffle and (for jaccard) no redundant per-band intersects."""
+    from the carried per-doc band values. Keeping only these rows makes
+    the band self-join emit each candidate pair exactly once, with no
+    pair-keyed dedup shuffle and (for jaccard) no redundant per-band
+    intersects."""
     pred = None
     for i in range(n_bands):
         cond = F.col("a.band_id") == F.lit(str(i))
         for j in range(i):
-            cond = cond & (F.col(f"a.bv{j}") != F.col(f"b.bv{j}"))
+            cond = cond & ~_band_shared(j)
         pred = cond if pred is None else (pred | cond)
     return pred
 
@@ -222,7 +236,7 @@ def _shared_band_count(n_bands: int) -> F.Column:
     count(*)-per-pair aggregate."""
     total = None
     for j in range(n_bands):
-        t = (F.col(f"a.bv{j}") == F.col(f"b.bv{j}")).cast("bigint")
+        t = _band_shared(j).cast("bigint")
         total = t if total is None else (total + t)
     return total
 
@@ -304,6 +318,34 @@ def lsh_candidate_pairs(
         F.col(f"b.{id_col}").alias("doc_b"),
         _shared_band_count(n_bands).alias("shared_bands"),
     )
+
+
+def lsh_bucket_edges(
+    signatures: DataFrame,
+    id_col: str,
+    num_hashes: int = DEFAULT_NUM_HASHES,
+    rows_per_band: int = 1,
+) -> DataFrame:
+    """Near-dup graph edges as LSH bucket STARS: each (band_id,
+    band_value) bucket links its smallest id to every other member, as
+    (doc_a=bucket min, doc_b=id) rows.
+
+    A bucket's clique in the ``lsh_candidate_pairs`` graph and its star
+    here span the same docs, so both graphs have exactly the same
+    connected components — what ``cluster_components`` needs — while
+    the star has at most bands × docs edges instead of Σ bucket² pairs
+    (BASELINE.md: ~769M directed pair edges at sf10). One shuffle on the
+    bucket key and a window min; no self-join, and no ``shared_bands``
+    (use ``lsh_candidate_pairs`` for the pairs themselves). NULL bands
+    are dropped: a window would put them all in one bucket.
+    """
+    bands = signature_bands(signatures, id_col, num_hashes, rows_per_band).where(
+        F.col("band_value").isNotNull()
+    )
+    bucket_min = F.min(id_col).over(Window.partitionBy("band_id", "band_value"))
+    return bands.select(
+        bucket_min.alias("doc_a"), F.col(id_col).alias("doc_b")
+    ).where(F.col("doc_a") < F.col("doc_b"))
 
 
 def incremental_lsh_matches(
@@ -552,6 +594,43 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return simhash(df, id_col, text_col, bits=16)
 
 
+def _union_find(batches):
+    """``mapInArrow`` kernel: union-find over one partition's (src, dst)
+    edge batches, emitting (node, min id of its component within this
+    partition) for every node the partition holds. Union by min root
+    keeps each root the minimum of its set; path halving keeps finds
+    short.
+
+    State: one dict entry per distinct id in this task's partition. It
+    is a per-partition map, not a grouped map: the shuffle that made
+    the partition bounds it, so no task ever holds a whole (possibly
+    corpus-sized) component as one group.
+    """
+    import pyarrow as pa
+
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    id_type = None
+    for batch in batches:
+        id_type = batch.schema.field(0).type
+        for a, b in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
+            ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    if parent:
+        nodes = list(parent)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(nodes, id_type), pa.array([find(n) for n in nodes], id_type)],
+            names=["node", "label"],
+        )
+
+
 def cluster_components(
     pairs: DataFrame,
     all_ids: DataFrame,
@@ -560,18 +639,28 @@ def cluster_components(
     checkpoint_dir: str | None = None,
     max_degree: int | None = None,
 ) -> DataFrame:
-    """Connected components over candidate pairs: every doc gets the MIN
-    doc id reachable through the pair graph as its cluster id — turning
-    LSH candidate PAIRS into dedup CLUSTERS with a canonical
-    representative (keep min id, drop the rest).
+    """Connected components over a near-dup graph: every doc gets the MIN
+    doc id reachable through the graph as its cluster id — turning LSH
+    buckets into dedup CLUSTERS with a canonical representative (keep
+    min id, drop the rest). ``pairs`` is any (doc_a, doc_b) edge list;
+    the catalog passes ``lsh_bucket_edges``' bucket stars, which have
+    the components of the candidate-pair graph at ≤ bands × docs edges.
 
-    Iterative min-label propagation: each round joins labels across
-    edges and keeps the smaller label; converges in O(graph diameter)
-    rounds (near-dup graphs are shallow — duplicates form small dense
-    cliques). Each round is one broadcast-or-shuffle join + one
-    aggregate; the driver loop only checks a 1-row convergence count, so
-    the data never leaves the cluster. This is the standard large-scale
-    CC recipe (label propagation), not a driver-side union-find.
+    Two phases, both on the symmetrised, DISK_ONLY-checkpointed edges:
+
+    1. Seed: a union-find inside each edge partition (``mapInArrow``,
+       ``_union_find``) labels every edge node with the min id of its
+       partition-local component; ``groupBy(node).min`` merges the
+       partitions. Each seed label is an id of the node's component and
+       ≤ the node, and the component min keeps its own id — a valid
+       starting labelling. When all edges sit in one partition the seed
+       is already the answer.
+    2. Min-label propagation with hub links until no label changes:
+       each round joins labels across the edges plus label ↔ node links
+       (pointer-doubling-style, O(log diameter) rounds) and keeps the
+       smaller label; the driver reads only a 1-row Observation per
+       round, so the data never leaves the cluster. A seed that is
+       already exact exits after one no-change round.
 
     ``checkpoint_dir``: when given, per-round lineage truncation uses
     RELIABLE checkpointing (files under this fault-tolerant dir — on a
@@ -596,7 +685,8 @@ def cluster_components(
     through their genuine pairwise edges, and per-round fan-out is
     bounded by max_degree. Degree-capping before CC is the standard
     large-graph mitigation; at 100 TB pick max_degree ~ the largest
-    plausible true duplicate-cluster size (e.g. 10^4).
+    plausible true duplicate-cluster size (e.g. 10^4). Over bucket
+    stars a bucket's min id has degree = bucket size.
     """
     spark = pairs.sparkSession
     if checkpoint_dir:
@@ -635,7 +725,12 @@ def cluster_components(
     # the iteration touches O(|near-dup docs|), not O(|corpus|)
     every = all_ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
     edge_nodes = edges.select(F.col("src").alias("node")).distinct()
-    labels = _ckpt(every.join(edge_nodes, "node", "semi"))
+    id_type = edges.schema["src"].dataType
+    seed = edges.mapInArrow(
+        _union_find,
+        StructType([StructField("node", id_type), StructField("label", id_type)]),
+    )
+    labels = _ckpt(seed.groupBy("node").agg(F.min("label").alias("label")))
     isolated = every.join(edge_nodes, "node", "anti")
     for _ in range(max_iter):
         # labels flowing across edges, PLUS hub links (label ↔ node from

@@ -1,0 +1,248 @@
+"""Near-dup clustering (operators/dedup.py): the LSH bucket-star edges
+``lsh_bucket_edges`` and ``cluster_components``, the connected
+components seeded by a per-partition union-find and finished by
+min-label propagation. Components are compared to a plain Python
+union-find."""
+
+import importlib.util
+import os
+import sys
+
+import numpy as np
+import pytest
+
+from backend_etl_spark.operators.dedup import (
+    DEFAULT_NUM_HASHES,
+    cluster_components,
+    lsh_bucket_edges,
+    lsh_candidate_pairs,
+    minhash_signatures,
+)
+
+
+def _uf_components(nodes, edges) -> dict:
+    """node -> min node of its connected component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _perfbench_gen():
+    """The benchmark's seeded corpus generator (perfbench/gen.py)."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench", "gen.py"
+    )
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # its dataclasses resolve their module
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _labels(df) -> dict:
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_bucket_edges_match_candidate_pair_components(spark, seed):
+    """On benchmark-shaped corpora the bucket stars and the candidate
+    pairs have the same components, and cluster_components over the
+    stars reproduces them."""
+    gen = _perfbench_gen()
+    n = 300
+    table = gen.documents_table(
+        np.random.default_rng([seed, 2, 0]), n, gen.CorpusTraffic().near_dup_share
+    )
+    docs = spark.createDataFrame(table.select(["doc_id", "text"]).to_pandas())
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    pairs = [(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()]
+    star = lsh_bucket_edges(sigs, "doc_id")
+    star_rows = [(r.doc_a, r.doc_b) for r in star.collect()]
+    assert all(a < b for a, b in star_rows)
+    assert len(star_rows) <= DEFAULT_NUM_HASHES * n
+    want = _uf_components(range(n), pairs)
+    assert _uf_components(range(n), star_rows) == want
+    assert _labels(cluster_components(star, docs.select("doc_id"), "doc_id")) == want
+
+
+def test_bucket_edges_hand_cases(spark):
+    """Identical texts share every bucket; a doc with a single-doc
+    bucket gets no edge; a doc under 3 tokens has no signature and
+    clusters alone."""
+    docs = spark.createDataFrame(
+        [
+            (1, "spark join merge sort hash"),
+            (2, "spark join merge sort hash"),
+            (3, "big"),
+            (4, "window vector value the table stream"),
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    assert sorted(r.doc_id for r in sigs.collect()) == [1, 2, 4]
+    star = lsh_bucket_edges(sigs, "doc_id")
+    assert {(r.doc_a, r.doc_b) for r in star.collect()} == {(1, 2)}
+    assert {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sigs, "doc_id").collect()} == {
+        (1, 2)
+    }
+    assert _labels(cluster_components(star, docs.select("doc_id"), "doc_id")) == {
+        1: 1, 2: 1, 3: 3, 4: 4
+    }
+
+
+def test_bucket_edges_null_band_never_buckets(spark):
+    """A band with a NULL hash buckets with nothing, in the stars and in
+    the candidate pairs alike (a window over band_value, or concat_ws,
+    would put every NULL band in one bucket)."""
+    sigs = spark.createDataFrame(
+        [
+            (1, "x", "p1", "q1", "r1"),
+            (2, "x", "p2", "q2", "r2"),
+            (3, None, "p3", "q3", "r3"),
+            (4, None, "p4", "q4", "r4"),
+            (5, None, None, None, None),
+            (6, None, None, None, None),
+            (7, "y", None, "s", "t"),
+            (8, "y", None, "s", "t"),
+        ],
+        "doc_id BIGINT, mh0 STRING, mh1 STRING, mh2 STRING, mh3 STRING",
+    )
+    # rows_per_band=1: bands 0, 2, 3 link 7-8; band 1 is NULL for both
+    star = {(r.doc_a, r.doc_b) for r in lsh_bucket_edges(sigs, "doc_id").collect()}
+    pairs = {
+        (r.doc_a, r.doc_b): r.shared_bands
+        for r in lsh_candidate_pairs(sigs, "doc_id").collect()
+    }
+    assert star == {(1, 2), (7, 8)}
+    assert pairs == {(1, 2): 1, (7, 8): 3}
+    # rows_per_band=2: band 0 ("y|NULL") is NULL, band 1 ("s|t") is shared
+    star2 = {
+        (r.doc_a, r.doc_b)
+        for r in lsh_bucket_edges(sigs, "doc_id", rows_per_band=2).collect()
+    }
+    pairs2 = {
+        (r.doc_a, r.doc_b): r.shared_bands
+        for r in lsh_candidate_pairs(sigs, "doc_id", rows_per_band=2).collect()
+    }
+    assert star2 == {(7, 8)}
+    assert pairs2 == {(7, 8): 1}
+
+
+def _path_and_small():
+    """A 300-node path (ids ascending along it), 60 small components of
+    2-4 nodes over shuffled ids and 20 isolated ids."""
+    rng = np.random.default_rng(7)
+    path = list(range(1000, 1300))
+    pairs = list(zip(path, path[1:]))
+    nxt = 2000
+    for size in rng.integers(2, 5, 60).tolist():
+        comp = rng.permutation(np.arange(nxt, nxt + size)).tolist()
+        pairs += list(zip(comp, comp[1:]))
+        nxt += size
+    return pairs, path + list(range(2000, nxt)) + list(range(5000, 5020))
+
+
+_CASES = {
+    "path_and_small": _path_and_small,
+    # the reliable-checkpoint test's frame: a chain, a pair, isolated ids
+    "chain": lambda: ([(1, 2), (2, 3), (3, 4), (7, 8)], list(range(1, 10))),
+    "empty": lambda: ([], list(range(1, 10))),
+}
+
+
+@pytest.mark.parametrize("case", list(_CASES))
+def test_cluster_components_matches_union_find(spark, case):
+    """Edges spread over many partitions (AQE coalescing off) give each
+    partition's union-find a fragment of a component: the seed is then
+    partial and the label rounds must finish it. Empty pairs leave
+    every doc its own cluster."""
+    pairs, nodes = _CASES[case]()
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        pairs_df = spark.createDataFrame(pairs, "doc_a BIGINT, doc_b BIGINT").repartition(16)
+        assert pairs_df.rdd.getNumPartitions() == 16
+        ids = spark.createDataFrame([(n,) for n in nodes], "doc_id BIGINT")
+        got = _labels(cluster_components(pairs_df, ids, "doc_id"))
+    finally:
+        spark.conf.set(key, old)
+    assert got == _uf_components(nodes, pairs)
+
+
+def test_cluster_components_reliable_checkpoint(spark, tmp_path):
+    """VERDICT fix: cluster_components with a reliable checkpoint_dir
+    (fault-tolerant path for real clusters) produces exactly the same
+    clustering as the local-mode localCheckpoint path."""
+    from backend_etl_spark.operators.dedup import cluster_components
+
+    # two components ({1..4} via a chain + {7,8}) and isolated {5,6,9}
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(1, 10)], "doc_id BIGINT")
+    want = {
+        r["doc_id"]: r["cluster_id"]
+        for r in cluster_components(pairs, ids, "doc_id").collect()
+    }
+    assert want == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 7, 8: 7, 9: 9}
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in cluster_components(
+            pairs, ids, "doc_id", checkpoint_dir=str(tmp_path / "ckpt")
+        ).collect()
+    }
+    assert got == want
+    # reliable checkpoint files actually landed in the given dir
+    import os
+
+    assert any(os.scandir(str(tmp_path / "ckpt")))
+
+
+def test_cluster_components_max_degree_guard(spark):
+    """VERDICT r2 item 7: a pathological hub (star graph) is degree-capped
+    so it can't stall convergence; genuine clusters are untouched."""
+    from backend_etl_spark.operators.dedup import cluster_components
+
+    # star: hub 100 joined to 30 spokes (101..130); plus a real pair (1,2)
+    star = [(100, s) for s in range(101, 131)]
+    pairs = spark.createDataFrame(star + [(1, 2)], "doc_a BIGINT, doc_b BIGINT")
+    ids = spark.createDataFrame(
+        [(i,) for i in [1, 2, 100] + list(range(101, 131))], "doc_id BIGINT"
+    )
+
+    # without the guard the star is one component labeled by the hub...
+    full = {
+        r["doc_id"]: r["cluster_id"]
+        for r in cluster_components(pairs, ids, "doc_id").collect()
+    }
+    assert full[100] == 100 and all(full[s] == 100 for s in range(101, 131))
+    assert full[1] == 1 and full[2] == 1
+
+    # ...with max_degree=10 the hub's edges drop: hub and spokes keep
+    # self-labels, the genuine (1,2) pair still clusters
+    capped = {
+        r["doc_id"]: r["cluster_id"]
+        for r in cluster_components(pairs, ids, "doc_id", max_degree=10).collect()
+    }
+    assert capped[100] == 100
+    assert all(capped[s] == s for s in range(101, 131))
+    assert capped[1] == 1 and capped[2] == 1
+
+    # bounded rounds: with every edge dropped nothing can change label,
+    # so the loop exits on the first convergence check even with a huge
+    # max_iter budget (guard against pathological-stall regressions)
+    import time
+
+    t0 = time.perf_counter()
+    cluster_components(pairs, ids, "doc_id", max_iter=500, max_degree=10).collect()
+    assert time.perf_counter() - t0 < 60
