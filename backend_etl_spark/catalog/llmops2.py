@@ -1797,9 +1797,9 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ONLY corpus-sized aggregate), then per-iteration pair counting,
     argmax (count desc / pair asc), and a boundary-safe literal-replace
     merge — the driver loop collects exactly one row per iteration, like
-    kmeans_fit's centroid pull. At 100 TB every iteration runs over the
-    Zipf-bounded word table (~10^6 rows), not the corpus. The oracle
-    unrolls the identical iterations in SQL."""
+    the k-means phase loop's centroid pull. At 100 TB every iteration
+    runs over the Zipf-bounded word table (~10^6 rows), not the corpus.
+    The oracle unrolls the identical iterations in SQL."""
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
     # min_pair_count=1: the oracle unrolls ALL _BPE_MERGES iterations
@@ -2452,9 +2452,6 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_emb = emb_raw.count()
     kt = max(_KM_K, n_emb // _SEM_TARGET)
     k1 = max(_KM_K, int(math.floor(math.sqrt(float(kt)))))
-    # n passed through: the coarse fit's seeding reuses the count above
-    # instead of a second count job (cold local[1] fixed-cost trim,
-    # r11 verdict item 4)
     # r13: the coarse fit runs on the RAW relation, not the
     # repartitioned one. Two effects, measured via the bench-alone cold
     # path (11.3 s, of which the coarse fit was 3.75 s): (a) every
@@ -2469,7 +2466,7 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _kmeans_cte oracle; semdedup's oracle parity re-checked at
     # sf0.001/0.01/0.1. The repartitioned frame still feeds the
     # flop-dense assign/pair stages below.
-    coarse = clustering.kmeans_fit(emb_raw, k=k1, iters=_KM_ITERS, n=n_emb)
+    coarse = clustering.kmeans_fit(emb_raw, k=k1, iters=_KM_ITERS)
     # r14: with the one-job fine fit the cell assignment feeds exactly
     # TWO jobs (the grouped fit and the final query) instead of
     # ~2·iters, and an EAGER checkpoint's materialization barrier

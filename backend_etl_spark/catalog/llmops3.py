@@ -306,11 +306,10 @@ def streaming_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         0: F.slice("embedding", 1, _PQ_HALF),
         1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
     }
-    # ONE lock-step train for all three quantizers (coarse + 2 PQ
-    # codebooks, per-tag k/iters): 3 jobs total instead of the 6-7 a
-    # separate coarse fit + PQ multi-fit paid — measured ~2 s off this
-    # entry's cold path at sf0.1, and at 100 TB it is one corpus scan
-    # per Lloyd's phase instead of two
+    # ONE train for all three quantizers (coarse + 2 PQ codebooks,
+    # per-tag k/iters): a size job, then every Lloyd round of the three
+    # fits in one grouped-map job. The base slice's ids are not dense
+    # (vec_id % 10 < 8); seeds stride on id values, as the oracle does
     fits = clustering.kmeans_fit_multi(
         {
             0: base.select("vec_id", halves[0].alias("embedding")),

@@ -57,8 +57,8 @@ def build_ivfpq_index(
         0: F.slice("embedding", 1, half),
         1: F.slice("embedding", half + 1, dim - half),
     }
-    # both subspace quantizers train lock-step: one driver job per
-    # phase for the pair instead of per subspace (numerics identical)
+    # both subspace quantizers are groups of one grouped-map fit job
+    # (numerics identical to a fit per subspace)
     codebooks: dict[int, dict[int, list[float]]] = clustering.kmeans_fit_multi(
         {s: emb.select("vec_id", sl.alias("embedding")) for s, sl in halves.items()},
         k=pq_k,

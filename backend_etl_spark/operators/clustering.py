@@ -3,16 +3,18 @@ column — the centroid builder for a real IVF (inverted-file) ANN index:
 fit k centroids, assign every vector to its nearest list, then restrict
 each query to its probe list(s).
 
-Execution model (the standard scale-out Lloyd's):
-- the k×dim centroid table lives on the DRIVER (tiny — 8×64 doubles
-  here; even k=65536, dim=1024 is ~0.5 GB, broadcastable),
-- each iteration is ONE distributed pass: the centroids ride the
-  closure of an Arrow-batched numpy kernel, per-row argmin (map-only),
-  then a posexplode → groupBy(cluster, dim) partial-aggregated avg — a
-  single shuffle of k×dim rows, independent of corpus size,
-- centroid averages are rounded to 6 dp each iteration so the whole
-  trajectory is engine-reproducible (the DuckDB oracle unrolls the same
-  iterations in SQL and lands on bit-identical centroids).
+Execution model: ONE Lloyd's kernel (_cell_fit), a grouped-map function
+that runs every round of a group's fit inside one task. A fit over one
+relation (kmeans_fit), several tagged relations (kmeans_fit_multi) or
+the cells of a two-level fit (kmeans_fit_grouped) is one Spark job,
+whatever its iteration count. A group must fit one Python worker
+(rows × dim × 8 bytes ≤ CELL_FIT_MAX_BYTES); above that bound
+kmeans_fit runs the scale-out loop (_fit_phases) instead: the k×dim
+centroid table stays on the driver and each update is one distributed
+pass whose shuffle is k×dim rows, independent of corpus size. Centroid
+averages are rounded to 6 dp each update on both paths, so the whole
+trajectory is engine-reproducible (the DuckDB oracle unrolls the same
+iterations in SQL and lands on bit-identical centroids).
 
 Every row-to-centroid assignment in this module runs through ONE
 distance fold (_nearest). Only the multi-probe argsort
@@ -24,6 +26,8 @@ cluster id, folds run in array order.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -234,11 +238,11 @@ def seed_centroids(
     emb_col: str = "embedding",
     n: int | None = None,
 ) -> dict[int, list[float]]:
-    """Deterministic strided seeds: the first k vectors whose id is a
-    multiple of floor(n/k), in id order. One count + one k-row collect;
-    a caller that already knows ``n`` passes it and skips the count job
-    (cold local[1] pays ~1 s of fixed cost per job — r11 verdict
-    item 4)."""
+    """Deterministic strided seeds: the first k rows whose id is a
+    multiple of floor(n/k), in id order, become centroids 0..k-1. ``n``
+    counts every row, NULL embeddings included; a seed row whose
+    embedding is NULL gives no centroid (its id stays unused). One k-row
+    collect, plus a count job unless the caller passes ``n``."""
     if n is None:
         n = df.count()
     stride = max(n // k, 1)
@@ -251,15 +255,18 @@ def seed_centroids(
     )
     # seeds stay unrounded: float32 → double widening is exact, so both
     # engines start from bit-identical centroids without a rounding step
-    return {i: [float(x) for x in r["v"]] for i, r in enumerate(rows)}
+    return {
+        i: [float(x) for x in r["v"]]
+        for i, r in enumerate(rows)
+        if r["v"] is not None
+    }
 
 
 #: per-process memo of completed fits, keyed by (normalized analyzed
 #: plan, k, iters, id_col, emb_col). Lloyd's here is fully deterministic
 #: (strided seeds, rounded updates, id tie-breaks), so a repeated fit
 #: over the same logical input is a pure recomputation — and profiling
-#: shows the cost is fixed driver overhead (seed and per-phase jobs),
-#: NOT data size: ~2.8 s at sf0.001 and sf0.1 alike. ~14
+#: shows the cost is fixed driver overhead (jobs), NOT data size. ~14
 #: catalog entries train the identical quantizer; memoizing is the
 #: in-process form of the FAISS train-once/persist discipline the
 #: persisted-index entries already follow, and at 100 TB it is exactly
@@ -309,46 +316,31 @@ def kmeans_fit(
     emb_col: str = "embedding",
     n: int | None = None,
 ) -> dict[int, list[float]]:
-    """Lloyd's iterations; returns the final centroid table. ``iters``
+    """Lloyd's k-means; returns the final centroid table. ``iters``
     assignment passes, ``iters - 1`` centroid updates (the last
     assignment is the caller's to materialize via assign_clusters).
 
-    Each update shuffles exactly k×dim (cluster, dim) partial averages —
-    corpus-size-independent. Clusters that lose all members drop out
-    (standard Lloyd's degeneracy; deterministic on both engines).
+    Path rule: one small job counts the rows and reads the dim. While
+    rows × dim × 8 bytes ≤ CELL_FIT_MAX_BYTES every round runs in the
+    grouped-map kernel (_cell_fit) as ONE group: one job, whatever
+    ``iters``. Above the bound the distributed phase loop
+    (_fit_phases) runs instead, a seed job plus one job per update, as
+    a grouped-map task holds its whole group. Both give the same
+    centroids.
+
+    Contract on either path (the _kmeans_cte oracle's): seeds are the
+    first k rows in id order whose id is a multiple of max(n // k, 1),
+    where n counts EVERY row, NULL embeddings included. A row with a
+    NULL embedding joins no cluster, and a NULL seed gives no centroid.
+    A cluster that loses all members drops out (standard Lloyd's
+    degeneracy). k < 1, iters < 1, an empty input or one with no
+    non-NULL seed raise ValueError.
+
     Fits are memoized per process (see _FIT_CACHE) — callers get a
-    defensive copy, never the cached object. ``n`` (the relation's row
-    count, when the caller already has it) skips the seeding count job.
+    defensive copy, never the cached object. ``n`` is accepted from
+    callers that already counted the rows; the path job counts anyway.
     """
-    plan = _plan_key(df)
-    key = (plan, k, iters, id_col, emb_col) if plan is not None else None
-    if key is not None:
-        hit = _FIT_CACHE.get(key)
-        if hit is not None:
-            return {cid: list(v) for cid, v in hit.items()}
-    cents = seed_centroids(df, k, id_col, emb_col, n=n)
-    for _ in range(iters - 1):
-        assigned = assign_clusters(df, cents, emb_col)
-        rows = (
-            assigned.select(
-                "cluster", F.posexplode(_as_double(F.col(emb_col))).alias("dim", "val")
-            )
-            .groupBy("cluster", "dim")
-            .agg(F.round(F.avg("val"), CENT_DP).alias("cv"))
-            .collect()
-        )
-        new_cents: dict[int, list[float]] = {}
-        dim = len(next(iter(cents.values())))
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["cv"]
-        for cid, dims in by_cluster.items():
-            new_cents[cid] = [dims[d] for d in range(dim)]
-        cents = new_cents
-    if key is not None:
-        _FIT_CACHE[key] = cents
-        return {cid: list(v) for cid, v in cents.items()}
-    return cents
+    return kmeans_fit_multi({0: df}, k, iters, id_col, emb_col)[0]
 
 
 def kmeans_fit_multi(
@@ -358,74 +350,72 @@ def kmeans_fit_multi(
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> dict[int, dict[int, list[float]]]:
-    """Lock-step Lloyd's over SEVERAL input relations — the PQ-codebook
-    case, where every subspace slice of the same corpus trains its own
-    quantizer. Numerically identical to calling kmeans_fit per relation
-    (per-tag seeds/updates never mix: every aggregate groups by the
-    tag), but the driver pays ONE job per phase for all tags instead of
-    one per tag per phase — at 100 TB an M-subspace PQ train is M
-    map-only scans folded into each pass instead of M separate passes.
+    """kmeans_fit over SEVERAL relations at once, e.g. the PQ codebooks,
+    where every subspace slice of one corpus trains its own quantizer.
+    ``k``/``iters`` are one int for every tag or a per-tag dict (a
+    coarse fit and its codebooks can train together). Each tag's result
+    equals an individual kmeans_fit over its relation.
 
-    ``k``/``iters`` may be a single int shared by all tags or a per-tag
-    dict (r8: lets a coarse IVF fit and its PQ codebooks — different k,
-    different iters — train in the same lock-step jobs; a tag stops
-    updating once ITS rounds are exhausted, and each phase's job runs
-    over the still-active tags only, so the per-tag update sequence is
-    identical to an individual fit).
+    One small job counts every tag's rows and reads its dim. The tags
+    under CELL_FIT_MAX_BYTES are the groups of ONE grouped-map job
+    (_cell_fit), whatever their k and iters; a tag above the bound runs
+    the phase loop (_fit_phases) on its own.
 
     Results are memoized under each relation's INDIVIDUAL kmeans_fit
-    cache key, so a later plain kmeans_fit over any of the slices hits.
-
-    The tagged union is deliberately NOT persisted across the phases
-    (the MLlib-style cache discipline was measured r9: cache build cost
-    exceeds the re-scan savings at fixture scale, +0.5-1.5 s per cold
-    fit). At production scale the training input is a sample by
-    construction; a caller that samples expensively should persist the
-    sample itself before fitting.
+    key: a tag already in the memo is not refitted, and a later
+    kmeans_fit over any of the relations hits.
     """
     tags = sorted(dfs)
     ks = {t: (k[t] if isinstance(k, dict) else k) for t in tags}
     its = {t: (iters[t] if isinstance(iters, dict) else iters) for t in tags}
-    keys = {
-        t: (
-            (_plan_key(dfs[t]), ks[t], its[t], id_col, emb_col)
-            if _plan_key(dfs[t]) is not None
-            else None
+    bad = [t for t in tags if ks[t] < 1 or its[t] < 1]
+    if bad:
+        raise ValueError(f"kmeans_fit: k and iters must be >= 1 (tags {bad})")
+    keys = {}
+    for t in tags:
+        plan = _plan_key(dfs[t])
+        keys[t] = None if plan is None else (plan, ks[t], its[t], id_col, emb_col)
+    todo = [t for t in tags if keys[t] is None or keys[t] not in _FIT_CACHE]
+    fits: dict[int, dict[int, list[float]]] = {}
+    if todo:
+        tagged = reduce(
+            DataFrame.unionAll,
+            [_tagged(dfs[t], F.lit(t), id_col, emb_col) for t in todo],
         )
+        sizes = {
+            r["_tag"]: (r["n"], r["dim"] or 0)
+            for r in tagged.groupBy("_tag")
+            .agg(F.count(F.lit(1)).alias("n"), F.max(F.size("_v")).alias("dim"))
+            .collect()
+        }
+        empty = [t for t in todo if t not in sizes]
+        if empty:
+            raise ValueError(
+                f"kmeans_fit: empty input relation(s) for tag(s) {empty} "
+                "— every tagged DataFrame must contribute at least one vector"
+            )
+        small = [t for t in todo if sizes[t][0] * sizes[t][1] * 8 <= CELL_FIT_MAX_BYTES]
+        if small:
+            fits = _run_cells(
+                tagged.where(F.col("_tag").isin(small)),
+                lambda t, _: (ks[t], its[t]),
+                by_rank=False,
+            )
+        for t in todo:
+            if t not in small:
+                fits[t] = _fit_phases(dfs[t], ks[t], its[t], id_col, emb_col, sizes[t][0])
+        seedless = [t for t in todo if not fits.get(t)]
+        if seedless:
+            raise ValueError(
+                f"kmeans_fit: no seed row has a non-NULL embedding (tags {seedless})"
+            )
+        for t in todo:
+            if keys[t] is not None:
+                _FIT_CACHE[keys[t]] = fits[t]
+    return {
+        t: {cid: list(v) for cid, v in (fits.get(t) or _FIT_CACHE[keys[t]]).items()}
         for t in tags
     }
-    if all(kk is not None and kk in _FIT_CACHE for kk in keys.values()):
-        return {
-            t: {cid: list(v) for cid, v in _FIT_CACHE[keys[t]].items()}
-            for t in tags
-        }
-
-    tagged = None
-    for t in tags:
-        d = dfs[t].select(
-            F.lit(int(t)).alias("_tag"),
-            F.col(id_col).alias("_id"),
-            _as_double(F.col(emb_col)).alias("_v"),
-        )
-        tagged = d if tagged is None else tagged.unionAll(d)
-
-    # one job: per-tag counts -> strides (same rule as seed_centroids)
-    counts = {
-        r["_tag"]: r["n"]
-        for r in tagged.groupBy("_tag").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    empty = [t for t in tags if counts.get(t, 0) == 0]
-    if empty:
-        raise ValueError(
-            f"kmeans_fit_multi: empty input relation(s) for tag(s) {empty} "
-            "— every tagged DataFrame must contribute at least one vector"
-        )
-    cents = _fit_lockstep(tagged, ks, its, counts)
-
-    for t in tags:
-        if keys[t] is not None:
-            _FIT_CACHE[keys[t]] = cents[t]
-    return {t: {cid: list(v) for cid, v in cents[t].items()} for t in tags}
 
 
 def _round_like_spark(x: float, dp: int = CENT_DP) -> float:
@@ -440,77 +430,130 @@ def _round_like_spark(x: float, dp: int = CENT_DP) -> float:
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
 
 
-#: Largest stacked cell matrix (rows × dim × 8 bytes of float64) one
-#: per-cell fit task may build. A grouped-map task holds its whole group
-#: in one Python worker: the Arrow-decoded object column, this matrix,
-#: and a rows × k distance matrix. The budget is Spark's default
+#: Largest stacked group matrix (rows × dim × 8 bytes of float64) one
+#: grouped-map fit task may build. A grouped-map task holds its whole
+#: group in one Python worker: the Arrow-decoded object column, this
+#: matrix, and a rows × k distance matrix. The budget is Spark's default
 #: per-Python-worker memory, ``spark.python.worker.memory`` = 512 MiB;
 #: the stacked matrix gets half, the rest is left for the object column
-#: and the distances. At dim 64 that is ~524k rows per cell; SemDeDup
+#: and the distances. At dim 64 that is ~524k rows per group; SemDeDup
 #: cells hold ~10·√n rows (about 250 at sf0.1, 4.5k at sf10).
 CELL_FIT_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _cell_fit(k_for_count, iters: int):
-    """Per-cell Lloyd's as a grouped-map kernel: ALL rounds of one
-    cell's fine fit run locally inside a single task — the whole
-    grouped fit is ONE Spark job (r14: the former per-phase jobs were
-    pure driver fixed cost at ~0.7-1 s each and pinned semdedup's
-    8→32-core scaling at 1.0).
+def _tagged(df: DataFrame, tag: Column, id_col: str, emb_col: str) -> DataFrame:
+    """The ``(_tag, _id, _v)`` frame the grouped-map kernel reads."""
+    return df.select(
+        tag.cast("int").alias("_tag"),
+        F.col(id_col).alias("_id"),
+        _as_double(F.col(emb_col)).alias("_v"),
+    )
 
-    Numerics per cell: seeds are strided over the cell's vec_id rank
-    (vec_id-sorted, rank % stride == 0, first k); assignment is the
-    _nearest fold; updates are the member mean rounded with
-    _round_like_spark — the same HALF_UP-on-shortest-decimal semantics
-    as kmeans_fit's distributed F.round(F.avg(...)) update. Summation
-    order (numpy pairwise over vec_id-sorted members vs Spark's
+
+def _cell_fit(params, by_rank: bool):
+    """The Lloyd's kernel: a grouped-map function that runs ALL rounds
+    of one group's fit inside a single task, so a fit over any number of
+    groups is ONE Spark job (r14: per-phase jobs were pure driver fixed
+    cost at ~0.7-1 s each). ``params(tag, n)`` gives a group's
+    ``(k, iters)`` from its tag and row count.
+
+    Numerics per group, the rules of _fit_phases and _kmeans_cte:
+    - seeds: the first k rows in id order whose id is a multiple of
+      max(n // k, 1), n counting every row; with ``by_rank`` the ids
+      are first remapped to their 0-based rank in the group (a cell
+      whose members share no multiple of the stride would otherwise
+      seed EMPTY). A NULL seed gives no centroid; NULL rows join none;
+    - assignment: the _nearest fold;
+    - update: the member mean rounded with _round_like_spark — the
+      HALF_UP-on-shortest-decimal of _fit_phases' F.round(F.avg(...));
+      a cluster without members drops out.
+    Summation order (numpy pairwise over id-sorted members vs Spark's
     partition-ordered partial aggregates) differs below the 6-dp
     rounding, the same attested-stable class as the DuckDB oracle
-    parity (tests/test_clustering.py pins grouped == per-cell kmeans_fit).
+    parity (tests/test_clustering.py pins kernel == phase loop).
 
-    A cell whose stacked matrix would exceed CELL_FIT_MAX_BYTES
+    A group whose stacked matrix would exceed CELL_FIT_MAX_BYTES
     raises instead of exhausting the worker."""
 
     def fit_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         tag = int(pdf["_tag"].iloc[0])
         cn = len(pdf)
-        dim = len(pdf["_v"].iloc[0])
+        pdf = pdf.sort_values("_id")
+        vs = pdf["_v"].to_numpy()
+        live = pdf["_v"].notna().to_numpy()
+        dim = len(vs[live][0]) if live.any() else 0
         if cn * dim * 8 > CELL_FIT_MAX_BYTES:
             raise ValueError(
-                f"kmeans_fit_grouped: cell {tag} holds {cn} rows × {dim} "
+                f"k-means fit: cell {tag} holds {cn} rows × {dim} "
                 f"dims ({cn * dim * 8} bytes), above CELL_FIT_MAX_BYTES "
                 f"({CELL_FIT_MAX_BYTES}) — use more, smaller cells"
             )
-        pdf = pdf.sort_values("_id")
-        X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        k = int(k_for_count(cn))
-        stride = max(cn // k, 1)
-        seed_idx = list(range(0, cn, stride))[:k]
-        cents: dict[int, np.ndarray] = {
-            i: X[seed_idx[i]] for i in range(len(seed_idx))
+        k, iters = (int(x) for x in params(tag, cn))
+        ids = np.arange(cn) if by_rank else pdf["_id"].to_numpy()
+        seeds = vs[ids % max(cn // k, 1) == 0][:k]
+        cents = {
+            i: np.asarray(v, dtype=np.float64)
+            for i, v in enumerate(seeds)
+            if v is not None
         }
-        for _ in range(iters - 1):
+        X = np.stack(vs[live]).astype(np.float64) if cents else None
+        for _ in range(iters - 1 if cents else 0):
             cids, C = _centroid_matrix(cents)
             nearest = _nearest(X, cids, C)[0]
-            new_cents: dict[int, np.ndarray] = {}
-            for c in cids:
-                mask = nearest == c
-                if not mask.any():
-                    continue  # emptied cluster drops out (Lloyd degeneracy)
-                m = X[mask].mean(axis=0)
-                new_cents[int(c)] = np.array(
-                    [_round_like_spark(v) for v in m]
+            cents = {
+                int(c): np.array(
+                    [_round_like_spark(v) for v in X[nearest == c].mean(axis=0)]
                 )
-            cents = new_cents
+                for c in np.unique(nearest)
+            }
+        fids = sorted(cents)
         return pd.DataFrame(
             {
-                "_tag": [tag] * len(cents),
-                "fid": [int(c) for c in sorted(cents)],
-                "cv": [list(map(float, cents[c])) for c in sorted(cents)],
+                "_tag": pd.Series([tag] * len(fids), dtype="int32"),
+                "fid": pd.Series(fids, dtype="int32"),
+                "cv": pd.Series(
+                    [[float(x) for x in cents[c]] for c in fids], dtype=object
+                ),
             }
         )
 
     return fit_cell
+
+
+def _run_cells(tagged: DataFrame, params, by_rank: bool) -> dict[int, dict[int, list[float]]]:
+    """One grouped-map job of _cell_fit over a ``_tagged`` frame:
+    ``{tag: {cid: centroid}}``."""
+    rows = tagged.groupBy("_tag").applyInPandas(
+        _cell_fit(params, by_rank), schema="_tag int, fid int, cv array<double>"
+    ).collect()
+    cents: dict[int, dict[int, list[float]]] = {}
+    for r in rows:
+        cents.setdefault(r["_tag"], {})[r["fid"]] = [float(x) for x in r["cv"]]
+    return cents
+
+
+def _fit_phases(
+    df: DataFrame, k: int, iters: int, id_col: str, emb_col: str, n: int
+) -> dict[int, list[float]]:
+    """The scale-out Lloyd's loop, for inputs above CELL_FIT_MAX_BYTES:
+    the k×dim centroid table stays on the driver; a seed job, then per
+    update one distributed pass (map-only _nearest assignment, then a
+    groupBy(cluster, dim) avg — a shuffle of k×dim rows, independent of
+    corpus size). Same rules as _cell_fit."""
+    cents = seed_centroids(df, k, id_col, emb_col, n=n)
+    for _ in range(iters - 1 if cents else 0):
+        rows = (
+            assign_clusters(df, cents, emb_col)
+            .select("cluster", F.posexplode(_as_double(F.col(emb_col))).alias("dim", "val"))
+            .groupBy("cluster", "dim")
+            .agg(F.round(F.avg("val"), CENT_DP).alias("cv"))
+            .collect()
+        )
+        by_cluster: dict[int, dict[int, float]] = {}
+        for r in rows:
+            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["cv"]
+        cents = {c: [dims[d] for d in range(len(dims))] for c, dims in by_cluster.items()}
+    return cents
 
 
 def kmeans_fit_grouped(
@@ -524,18 +567,16 @@ def kmeans_fit_grouped(
     memo_tag: str | None = None,
 ) -> dict[int, dict[int, list[float]]]:
     """Lloyd's over the GROUPS of one pre-tagged relation — the second
-    level of a two-level (coarse → per-cell fine) fit. Every group's
-    rounds run inside one grouped-map task (_cell_fit), so the
-    whole fit is ONE Spark job; a task holds one cell's vectors, never
-    the corpus, and a cell past CELL_FIT_MAX_BYTES fails loudly.
+    level of a two-level (coarse → per-cell fine) fit. Every group is a
+    group of the _cell_fit kernel, so the whole fit is ONE Spark job; a
+    task holds one cell's vectors, never the corpus, and a cell past
+    CELL_FIT_MAX_BYTES fails loudly.
 
     ``k_for_count`` maps a cell's row count to its fine k (e.g.
     ``lambda n: max(1, n // 100)`` keeps fine clusters ~100 vectors for
-    a SemDeDup pair stage). Seeds/updates per group equal an individual
-    kmeans_fit over that group's rows with vec_ids remapped to their
-    0-based rank within the group (striding on the rank, not the id:
-    a cell whose members share no multiple of the stride would
-    otherwise seed EMPTY).
+    a SemDeDup pair stage). Each cell's fit equals an individual
+    kmeans_fit over the cell's rows with vec_ids remapped to their
+    0-based rank within the cell (striding on the rank, not the id).
 
     Memoization: ``df`` is typically checkpointed (no stable plan key),
     so the caller passes ``memo_df`` — the UPSTREAM parquet-backed
@@ -554,91 +595,18 @@ def kmeans_fit_grouped(
                     t: {cid: list(v) for cid, v in c.items()}
                     for t, c in hit.items()
                 }
-    tagged = df.select(
-        F.col(tag_col).cast("int").alias("_tag"),
-        F.col(id_col).alias("_id"),
-        _as_double(F.col(emb_col)).alias("_v"),
+    cents = _run_cells(
+        _tagged(df, F.col(tag_col), id_col, emb_col),
+        lambda _, cn: (k_for_count(cn), iters),
+        by_rank=True,
     )
-    rows = tagged.groupBy("_tag").applyInPandas(
-        _cell_fit(k_for_count, iters),
-        schema="_tag int, fid int, cv array<double>",
-    ).collect()
-    if not rows:
+    if not cents:
         raise ValueError("kmeans_fit_grouped: empty input relation")
-    cents: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
-        cents.setdefault(r["_tag"], {})[r["fid"]] = [float(x) for x in r["cv"]]
     if key is not None:
         _FIT_CACHE[key] = cents
         return {
             t: {cid: list(v) for cid, v in c.items()} for t, c in cents.items()
         }
-    return cents
-
-
-def _fit_lockstep(
-    tagged: DataFrame,
-    ks: dict[int, int],
-    its: dict[int, int],
-    counts: dict[int, int],
-) -> dict[int, dict[int, list[float]]]:
-    """Lock-step Lloyd's core of kmeans_fit_multi over a ``(_tag, _id,
-    _v)`` frame: one job for every tag's strided seeds (seed_centroids'
-    rule on the tag's own ids), then one assignment+update job per
-    phase for the still-active tags — per-tag numerics identical to an
-    individual kmeans_fit."""
-    from pyspark.sql.window import Window
-
-    tags = sorted(ks)
-
-    def per_tag(values: dict[int, int]) -> Column:
-        expr = F.when(F.col("_tag") == tags[0], F.lit(values[tags[0]]))
-        for t in tags[1:]:
-            expr = expr.when(F.col("_tag") == t, F.lit(values[t]))
-        return expr
-
-    stride = per_tag({t: max(counts[t] // ks[t], 1) for t in tags})
-    # row_number == orderBy+limit on unique ids
-    w = Window.partitionBy("_tag").orderBy("_id")
-    seed_rows = (
-        tagged.where((F.col("_id") % stride) == 0)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= per_tag(ks))
-        .select("_tag", "_rn", "_v")
-        .collect()
-    )
-    cents: dict[int, dict[int, list[float]]] = {t: {} for t in tags}
-    for r in sorted(seed_rows, key=lambda r: (r["_tag"], r["_rn"])):
-        cents[r["_tag"]][r["_rn"] - 1] = [float(x) for x in r["_v"]]
-
-    for phase in range(max(its.values()) - 1):
-        # a tag updates exactly its[t]-1 times, then freezes — each
-        # phase's single job runs over the still-active tags only
-        active = [t for t in tags if phase < its[t] - 1]
-        rows = (
-            assign_clusters_multi(
-                tagged.where(F.col("_tag").isin(active)),
-                {t: cents[t] for t in active},
-                tag_col="_tag",
-                emb_col="_v",
-                out_col="_c",
-            )
-            .select("_tag", "_c", F.posexplode("_v").alias("dim", "val"))
-            .groupBy("_tag", "_c", "dim")
-            .agg(F.round(F.avg("val"), CENT_DP).alias("cv"))
-            .collect()
-        )
-        new_cents: dict[int, dict[int, list[float]]] = {
-            t: ({} if t in active else cents[t]) for t in tags
-        }
-        by_tc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            by_tc.setdefault((r["_tag"], r["_c"]), {})[r["dim"]] = r["cv"]
-        for (t, cid), dims in by_tc.items():
-            dim = len(next(iter(cents[t].values())))
-            new_cents[t][cid] = [dims[d] for d in range(dim)]
-        cents = new_cents
-
     return cents
 
 

@@ -660,7 +660,10 @@ def cluster_components(
        (pointer-doubling-style, O(log diameter) rounds) and keeps the
        smaller label; the driver reads only a 1-row Observation per
        round, so the data never leaves the cluster. A seed that is
-       already exact exits after one no-change round.
+       already exact exits after one no-change round. When ``max_iter``
+       rounds end with labels still changing, it raises RuntimeError
+       (naming the rounds and the last changed count) rather than
+       return unconverged labels.
 
     ``checkpoint_dir``: when given, per-round lineage truncation uses
     RELIABLE checkpointing (files under this fault-tolerant dir — on a
@@ -732,6 +735,7 @@ def cluster_components(
     )
     labels = _ckpt(seed.groupBy("node").agg(F.min("label").alias("label")))
     isolated = every.join(edge_nodes, "node", "anti")
+    changed = None
     for _ in range(max_iter):
         # labels flowing across edges, PLUS hub links (label ↔ node from
         # the current labeling): once any member learns the component
@@ -789,8 +793,14 @@ def cluster_components(
         from backend_etl_spark.session import release_checkpoint
 
         release_checkpoint(prev_labels)
-        if not obs.get["changed"]:
+        changed = obs.get["changed"]
+        if not changed:
             break
+    else:
+        raise RuntimeError(
+            f"cluster_components: labels still changing after max_iter="
+            f"{max_iter} rounds ({changed} changed in the last round)"
+        )
     return labels.unionByName(isolated).select(
         F.col("node").alias(id_col), F.col("label").alias("cluster_id")
     )

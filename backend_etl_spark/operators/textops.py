@@ -461,7 +461,7 @@ def bpe_train_merges(
       for production n_merges), and only the final merge pays a
       trailing vocab-only job.
     - The 2-row collect per iteration keeps the same driver-side
-      control-loop discipline as kmeans_fit's centroid pull.
+      control-loop discipline as the k-means phase loop's centroid pull.
 
     Words containing the sentinel bytes are dropped (impossible in
     normalized text; guarded identically in the oracle).

@@ -117,40 +117,3 @@ class TestRadiusCoverSlack:
             true_span = math.degrees(2 * math.asin(min(1.0, s)))
             assert dx * cell > true_span, (r, cell, maxlat)
             assert dy * cell > r / geo.KM_PER_DEG
-
-
-class TestKmeansFitMemoization:
-    def test_file_backed_fit_is_memoized_and_copied(self, spark, sf_dir):
-        from backend_etl_spark.operators import clustering
-        from backend_etl_spark.sources.loader import load_table
-
-        clustering._FIT_CACHE.clear()
-        emb = load_table(spark, sf_dir, "embeddings")
-        c1 = clustering.kmeans_fit(emb, k=8, iters=3)
-        # fresh DataFrame over the same files must hit the cache and
-        # return an equal but independent object
-        c2 = clustering.kmeans_fit(
-            load_table(spark, sf_dir, "embeddings"), k=8, iters=3
-        )
-        assert c1 == c2 and c1 is not c2
-        assert len(clustering._FIT_CACHE) == 1
-        c1[0][0] = 999.0  # caller mutation must not poison the cache
-        assert clustering.kmeans_fit(emb, k=8, iters=3)[0][0] != 999.0
-
-    def test_in_memory_relations_never_cached(self, spark):
-        from backend_etl_spark.operators import clustering
-
-        clustering._FIT_CACHE.clear()
-        a = spark.createDataFrame(
-            [(i, [float(i), 0.0]) for i in range(8)],
-            "vec_id INT, embedding ARRAY<DOUBLE>",
-        )
-        b = spark.createDataFrame(
-            [(i, [0.0, float(i * 3)]) for i in range(8)],
-            "vec_id INT, embedding ARRAY<DOUBLE>",
-        )
-        ca = clustering.kmeans_fit(a, k=2, iters=2)
-        cb = clustering.kmeans_fit(b, k=2, iters=2)
-        # identical schemas/plans but different data: must NOT collide
-        assert ca != cb
-        assert len(clustering._FIT_CACHE) == 0

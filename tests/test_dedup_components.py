@@ -159,13 +159,9 @@ _CASES = {
 }
 
 
-@pytest.mark.parametrize("case", list(_CASES))
-def test_cluster_components_matches_union_find(spark, case):
-    """Edges spread over many partitions (AQE coalescing off) give each
-    partition's union-find a fragment of a component: the seed is then
-    partial and the label rounds must finish it. Empty pairs leave
-    every doc its own cluster."""
-    pairs, nodes = _CASES[case]()
+def _components_in_16_partitions(spark, pairs, nodes, **kw):
+    """cluster_components over ``pairs`` spread across 16 partitions,
+    with AQE coalescing off so they stay spread."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -173,10 +169,31 @@ def test_cluster_components_matches_union_find(spark, case):
         pairs_df = spark.createDataFrame(pairs, "doc_a BIGINT, doc_b BIGINT").repartition(16)
         assert pairs_df.rdd.getNumPartitions() == 16
         ids = spark.createDataFrame([(n,) for n in nodes], "doc_id BIGINT")
-        got = _labels(cluster_components(pairs_df, ids, "doc_id"))
+        return _labels(cluster_components(pairs_df, ids, "doc_id", **kw))
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("case", list(_CASES))
+def test_cluster_components_matches_union_find(spark, case):
+    """Edges spread over many partitions (AQE coalescing off) give each
+    partition's union-find a fragment of a component: the seed is then
+    partial and the label rounds must finish it. Empty pairs leave
+    every doc its own cluster."""
+    pairs, nodes = _CASES[case]()
+    got = _components_in_16_partitions(spark, pairs, nodes)
     assert got == _uf_components(nodes, pairs)
+
+
+def test_cluster_components_raises_when_max_iter_runs_out(spark):
+    """A path over shuffled ids, spread over 16 partitions, needs many
+    label rounds: with max_iter=2 the loop must raise, naming the rounds
+    and the last changed count, instead of returning unconverged
+    labels."""
+    path = np.random.default_rng(3).permutation(100).tolist()
+    pairs = list(zip(path, path[1:]))
+    with pytest.raises(RuntimeError, match=r"max_iter=2 rounds \([1-9]\d* changed"):
+        _components_in_16_partitions(spark, pairs, path, max_iter=2)
 
 
 def test_cluster_components_reliable_checkpoint(spark, tmp_path):

@@ -1,7 +1,6 @@
 """Round-11 mechanism pins: the conflict-safe MinHash fold, the
 canonical bench_full routing, the gated per-row-cost baseline roll, the
-row-blocked cosine kernel and the two-level SemDeDup fit's parity with
-per-cell fits. (The round's other clustering pins live in
+row-blocked cosine kernel. (The round's other clustering pins live in
 tests/test_clustering.py.)"""
 
 from __future__ import annotations
@@ -187,44 +186,6 @@ def test_blocked_cosine_kernel_matches_unblocked(spark, monkeypatch):
         for r in D.intra_bucket_cosine_pairs(df, threshold=-1.0).collect()
     )
     assert small == full and len(full) == 2 * (20 * 19 // 2)
-
-
-# ------------------------------------------------- two-level semdedup fit
-
-
-def test_grouped_fit_equals_individual_fits_on_rank_remapped_ids(spark):
-    """kmeans_fit_grouped (rank-strided seeds) over a tagged frame must
-    equal an individual kmeans_fit per cell with ids remapped to the
-    cell-local rank (rank striding on real ids == id striding on
-    contiguous rank ids) — the parity that makes the hierarchical
-    semdedup oracle mirrorable."""
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from backend_etl_spark.operators import clustering as C
-
-    rng = np.random.default_rng(7)
-    # non-contiguous, interleaved ids across 3 cells — the case where
-    # global id striding could seed a cell EMPTY
-    rows = [
-        (int(1000 + 7 * i), int(i % 3), [float(x) for x in rng.normal(0, 1, 4)])
-        for i in range(90)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, cell int, embedding array<double>")
-
-    got = C.kmeans_fit_grouped(df, "cell", lambda n: max(2, n // 10), iters=3)
-
-    want = {}
-    for c in (0, 1, 2):
-        sub = df.where(F.col("cell") == c)
-        remapped = sub.withColumn(
-            "vec_id",
-            F.row_number().over(Window.orderBy("vec_id")).cast("long") - 1,
-        )
-        n = sub.count()
-        want[c] = C.kmeans_fit(remapped, k=max(2, n // 10), iters=3)
-    assert got == want
 
 
 def test_roll_history_refused_on_degraded_run():
