@@ -117,3 +117,25 @@ class TestRadiusCoverSlack:
             true_span = math.degrees(2 * math.asin(min(1.0, s)))
             assert dx * cell > true_span, (r, cell, maxlat)
             assert dy * cell > r / geo.KM_PER_DEG
+
+
+class TestKmeansFitMemoization:
+    def test_in_memory_relations_never_cached(self, spark):
+        """A LogicalRDD/LocalRelation input has no stable identity — the
+        memo must refuse it (None key) rather than collide two datasets."""
+        from backend_etl_spark.operators import clustering
+
+        clustering._FIT_CACHE.clear()
+        a = spark.createDataFrame(
+            [(i, [float(i), 0.0]) for i in range(8)],
+            "vec_id INT, embedding ARRAY<DOUBLE>",
+        )
+        b = spark.createDataFrame(
+            [(i, [0.0, float(i * 3)]) for i in range(8)],
+            "vec_id INT, embedding ARRAY<DOUBLE>",
+        )
+        ca = clustering.kmeans_fit(a, k=2, iters=2)
+        cb = clustering.kmeans_fit(b, k=2, iters=2)
+        # identical schemas/plans but different data: must NOT collide
+        assert ca != cb
+        assert len(clustering._FIT_CACHE) == 0

@@ -413,26 +413,6 @@ def test_file_backed_fit_is_memoized_and_copied(spark, sf_dir):
     assert C.kmeans_fit(emb, k=8, iters=3)[0][0] != 999.0
 
 
-def test_in_memory_relations_never_cached(spark):
-    """A LogicalRDD/LocalRelation input has no stable identity — the
-    memo must refuse it (None key) rather than collide two datasets."""
-    C._FIT_CACHE.clear()
-    a = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(8)],
-        "vec_id INT, embedding ARRAY<DOUBLE>",
-    )
-    b = spark.createDataFrame(
-        [(i, [0.0, float(i * 3)]) for i in range(8)],
-        "vec_id INT, embedding ARRAY<DOUBLE>",
-    )
-    assert C._plan_key(a) is None
-    ca = C.kmeans_fit(a, k=2, iters=2)
-    cb = C.kmeans_fit(b, k=2, iters=2)
-    # identical schemas/plans but different data: must NOT collide
-    assert ca != cb
-    assert len(C._FIT_CACHE) == 0
-
-
 def test_bench_warmup_never_populates_fit_cache(spark, sf_dir):
     """bench.py's warmup entries (q3_shipping_priority,
     multimodal_binary_meta) must not train any fit: a memo entry

