@@ -736,7 +736,7 @@ def emb_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_bigram_logprob(
-    spark: SparkSession, sf_dir: str, checkpoint_stats: bool | str = True
+    spark: SparkSession, sf_dir: str, checkpoint_stats: str = "eager"
 ) -> DataFrame:
     """Corpus bigram-LM quality filter (the KenLM-perplexity shape used
     by CCNet/RedPajama, self-trained here): per-doc mean log2 P(w2|w1)
@@ -788,27 +788,22 @@ def quality_bigram_logprob(
         ).alias("x")
     ).select(F.col("x.o").alias("o"), F.col("x.g").alias("g"))
     # ``checkpoint_stats`` (r14): the Zipf-bounded stats relation has
-    # THREE consumers (bc twice — the lp join and ctx — plus vocab).
-    # - True (solo-entry default): EAGER localCheckpoint — the r13 A/B
-    #   measured it 1.41× ahead for the standalone entry.
-    # - "lazy": non-eager localCheckpoint — used when this LM is
-    #   COMPOSED inside a larger plan (corpus_pipeline_funnel). An
-    #   eager checkpoint there is a materialization BARRIER executed
-    #   during plan CONSTRUCTION (the corpus stats pass can no longer
-    #   overlap the entropy/repetition passes — the r13 funnel
-    #   regression); non-eager materializes inside the consuming job's
-    #   own shared stage and the other consumers read the blocks.
-    # - False: no checkpoint at all — measured 2.3× WORSE at sf10
-    #   (bench_full_sf10_degraded.json r14: the funnel's solo retime
-    #   116.6 s vs the r12 record's 50.5 s): the three consumers print
-    #   three copies of the stats subtree and exchange reuse does NOT
-    #   collapse them, so the corpus pass runs three times. Kept only
-    #   as the measured-and-rejected reference point.
+    # THREE consumers (bc twice — the lp join and ctx — plus vocab), so
+    # it is always checkpointed: without one, the three consumers print
+    # three copies of the stats subtree, exchange reuse does NOT
+    # collapse them, and the corpus pass runs three times — measured
+    # 2.3× WORSE at sf10 (bench_full_sf10_degraded.json r14: the
+    # funnel's solo retime 116.6 s vs the r12 record's 50.5 s).
+    # - "eager" (the solo entry): the r13 A/B measured it 1.41× ahead.
+    # - "lazy": used when this LM is COMPOSED inside a larger plan
+    #   (corpus_pipeline_funnel). An eager checkpoint there is a
+    #   materialization BARRIER executed during plan CONSTRUCTION (the
+    #   corpus stats pass can no longer overlap the entropy/repetition
+    #   passes — the r13 funnel regression); non-eager materializes
+    #   inside the consuming job's own shared stage and the other
+    #   consumers read the blocks.
     stats = tagged.groupBy("o", "g").agg(F.count(F.lit(1)).alias("c"))
-    if checkpoint_stats == "lazy":
-        stats = stats.localCheckpoint(eager=False)
-    elif checkpoint_stats:
-        stats = stats.localCheckpoint(eager=True)
+    stats = stats.localCheckpoint(eager={"eager": True, "lazy": False}[checkpoint_stats])
     bc = stats.where(F.col("o") == 2).select(
         F.col("g").alias("bigram"), "c"
     )
@@ -872,36 +867,6 @@ _PQ_K = 4
 _PQ_ITERS = 2
 _PQ_DIM = 64  # fixture embedding dim (asserted at runtime)
 _PQ_HALF = _PQ_DIM // 2
-
-
-def _adc_maps(codebooks: dict, dist) -> list:
-    """Per-query ADC tables as cid-keyed MAPS, not positional arrays:
-    Lloyd's can empty a cell and drop its cid from the codebook (see
-    kmeans_fit), so array position ≠ codeword id in general — a
-    positional element_at(arr, code+1) would silently read a wrong
-    cell's distance (or throw past-the-end under ANSI) the day a
-    codebook comes back sparse. Keying the lookup by the code itself is
-    immune, and matches the oracle, which joins on the actual cid.
-    ``dist(s, cw)`` returns the query↔codeword distance expression for
-    subspace ``s``."""
-    return [
-        F.map_from_arrays(
-            F.array(*[F.lit(int(cid)) for cid, _ in sorted(codebooks[s].items())]),
-            F.array(
-                *[F.round(dist(s, cw), 6) for _, cw in sorted(codebooks[s].items())]
-            ),
-        ).alias(f"adt{s}")
-        for s in sorted(codebooks)
-    ]
-
-
-def _adc_approx() -> F.Column:
-    """approx_dist2 = ADC lookup of both subspace codes + add."""
-    return F.round(
-        F.call_function("element_at", F.col("adt0"), F.col("code0"))
-        + F.call_function("element_at", F.col("adt1"), F.col("code1")),
-        6,
-    )
 
 
 def _pq_cte(
@@ -980,31 +945,15 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     final code join is vec_id-keyed. The oracle unrolls both subspace
     fits in one WITH clause (prefixed CTEs)."""
     tune(spark)
+    from backend_etl_spark.operators import ann_index
+
     emb = load_table(spark, sf_dir, "embeddings")
-    sub = {
-        0: emb.select("vec_id", F.slice("embedding", 1, _PQ_HALF).alias("embedding")),
-        1: emb.select(
-            "vec_id",
-            F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF).alias("embedding"),
-        ),
-    }
-    cents = clustering.kmeans_fit_multi(sub, k=_PQ_K, iters=_PQ_ITERS)
-    for s in cents:
-        assert len(next(iter(cents[s].values()))) == _PQ_HALF, (
+    cents = ann_index.train(emb, _PQ_DIM, _PQ_K, _PQ_ITERS)
+    for kind in ("pq0", "pq1"):
+        assert len(next(iter(cents[kind].values()))) == _PQ_HALF, (
             "fixture embedding dim changed; update _PQ_DIM and the oracle"
         )
-    # single-pass encode: both subspace argmins (code + err2) in ONE
-    # Arrow-batched kernel (r9: replaces two literal-argmin expressions
-    # — same attested numerics, no per-entry expression compile; no
-    # corpus-wide vec_id join between subspaces)
-    kern = clustering.multi_encode_np(
-        {
-            "code0": (cents[0], (0, _PQ_HALF)),
-            "code1": (cents[1], (_PQ_HALF, _PQ_DIM)),
-        },
-        with_dist=True,
-    )
-    nc = kern(clustering._as_double(F.col("embedding")))
+    nc = ann_index.encode(cents, _PQ_DIM, with_dist=True)
     return emb.select(
         "vec_id",
         *[nc[f"code{s}"].cast("bigint").alias(f"code{s}") for s in (0, 1)],
@@ -1060,7 +1009,7 @@ def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"),
             dbl.alias("qv"),
-            F.explode("probes").alias("pc"),
+            F.explode_outer("probes").alias("pc"),
         )
     )
     cand = corpus.join(
@@ -1170,55 +1119,33 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     IndexPQ layout): the corpus side is scanned as ONLY its
     (code0, code1) byte pair — full vectors never move — while each
     query carries a tiny k-entry distance table per subspace
-    (dist(query_sub, codeword), computed map-side against the literal
-    codebooks). approx_dist2 = two array lookups + an add per corpus
+    (dist(query_sub, codeword), computed map-side by the ADC kernel over
+    the codebooks). approx_dist2 = two array lookups + an add per corpus
     code. At 100 TB the 256x memory cut is what lets the index fit hot
     storage; composing with the coarse quantizer (the cluster equi-join
     of knn_ivf_kmeans) turns this exhaustive ADC scan into IVF-PQ, and
     exact re-rank of the survivors (knn_brute_force_cosine shape)
     completes the funnel."""
     tune(spark)
+    from backend_etl_spark.operators import ann_index
+
     emb = load_table(spark, sf_dir, "embeddings")
-    halves = {
-        0: F.slice("embedding", 1, _PQ_HALF),
-        1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
-    from backend_etl_spark.operators.clustering import _dist2, _as_double
-
-    codebooks = clustering.kmeans_fit_multi(
-        {s: emb.select("vec_id", sl.alias("embedding")) for s, sl in halves.items()},
-        k=_PQ_K,
-        iters=_PQ_ITERS,
-    )
-    # single-pass encode: both subspace argmins in ONE Arrow-batched
-    # kernel (r9 — attested numerics, no per-entry expression compile;
-    # no corpus-wide vec_id join between the subspaces)
-    enc = clustering.multi_encode_np(
-        {
-            "code0": (codebooks[0], (0, _PQ_HALF)),
-            "code1": (codebooks[1], (_PQ_HALF, _PQ_DIM)),
-        }
-    )(clustering._as_double(F.col("embedding")))
+    codebooks = ann_index.train(emb, _PQ_DIM, _PQ_K, _PQ_ITERS)
+    enc = ann_index.encode(codebooks, _PQ_DIM)
     coded = emb.select(
-        "vec_id", *[enc[f"code{s}"].alias(f"code{s}") for s in (0, 1)]
+        F.col("vec_id").alias("neighbor_id"),
+        *[enc[f"code{s}"].alias(f"code{s}") for s in (0, 1)],
     )
-
-    # per-query ADC tables: k rounded squared distances per subspace,
-    # keyed by codeword id (robust to sparse codebooks — see _adc_maps)
-    adt = _adc_maps(codebooks, lambda s, cw: _dist2(_as_double(halves[s]), cw))
     queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), *adt
+        F.col("vec_id").alias("q_id"),
+        *ann_index.adc_tables(codebooks, _PQ_DIM, F.col("embedding")),
     )
-    approx = _adc_approx()
-    w = Window.partitionBy("q_id").orderBy(F.asc("approx_dist2"), F.asc("neighbor_id"))
-    return (
-        coded.withColumnRenamed("vec_id", "neighbor_id")
-        .crossJoin(F.broadcast(queries))
+    cand = (
+        coded.crossJoin(F.broadcast(queries))
         .where(F.col("neighbor_id") != F.col("q_id"))
-        .select("q_id", "neighbor_id", approx.alias("approx_dist2"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
+        .select("q_id", "neighbor_id", ann_index.adc_approx().alias("approx_dist2"))
     )
+    return ann_index.top_k(cand, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -1269,70 +1196,22 @@ _IVFPQ_ORACLE_COMMON = f"""
 def _ivfpq_search(spark: SparkSession, sf_dir: str):
     """Shared IVF-PQ machinery: returns (candidates, top3, emb).
 
-    Index build composes the two attested stages: the coarse k-means
-    quantizer assigns every vector to an inverted list
-    (knn_ivf_kmeans shape) and each vector is PQ-encoded to a
-    (code0, code1) byte pair (emb_pq_codes shape). Search composes the
-    other two: multi-probe candidate generation (nprobe=2 — only the
-    probed lists' codes are scanned, an equi-join on cluster id) scored
-    by ADC lookup (two array reads + an add per candidate — full vectors
-    never move). This is FAISS IndexIVFPQ with by_residual=False, built
-    from public literature (Jégou et al., PAPERS.md)."""
+    The in-memory form of the persisted index (operators/ann_index.py):
+    one train of the coarse quantizer and both PQ codebooks, one encode
+    of every vector to (cluster, code0, code1), then the one search —
+    multi-probe (nprobe=2, an equi-join on cluster id) scored by ADC
+    lookup (two map reads + an add per candidate; full vectors never
+    move). This is FAISS IndexIVFPQ with by_residual=False, built from
+    public literature (Jégou et al., PAPERS.md)."""
+    from backend_etl_spark.operators import ann_index
+
     emb = load_table(spark, sf_dir, "embeddings")
-    coarse = clustering.kmeans_fit(emb, k=_KM_K, iters=_KM_ITERS)
-    halves = {
-        0: F.slice("embedding", 1, _PQ_HALF),
-        1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
-    from backend_etl_spark.operators.clustering import _as_double, _dist2
-
-    codebooks = clustering.kmeans_fit_multi(
-        {s: emb.select("vec_id", sl.alias("embedding")) for s, sl in halves.items()},
-        k=_PQ_K,
-        iters=_PQ_ITERS,
-    )
-    # single-pass encode: coarse + both subspace argmins in ONE
-    # Arrow-batched kernel (r9 — attested numerics, no 3-quantizer
-    # expression compile) — the per-subspace assign-then-join-on-vec_id
-    # this replaces shuffles the full corpus once per subspace at scale
-    enc = clustering.multi_encode_np(
-        {
-            "cluster": (coarse, None),
-            "code0": (codebooks[0], (0, _PQ_HALF)),
-            "code1": (codebooks[1], (_PQ_HALF, _PQ_DIM)),
-        }
-    )(clustering._as_double(F.col("embedding")))
-    index = emb.select(
-        "vec_id",
-        # non-nullable list id: the probe join's inferred
-        # IsNotNull(cluster) used to be pushed below this projection,
-        # duplicating the encode kernel over the full corpus (guide
-        # §4.4). -1 is unreachable (the kernel raises on NULL vectors).
-        F.coalesce(enc["cluster"], F.lit(-1)).alias("cluster"),
-        *[enc[f"code{s}"].alias(f"code{s}") for s in (0, 1)],
-    )
-
-    adt = _adc_maps(codebooks, lambda s, cw: _dist2(_as_double(halves[s]), cw))
-    queries = clustering.probe_clusters(
-        emb.where(F.col("vec_id") < 5), coarse, nprobe=2
-    ).select(F.col("vec_id").alias("q_id"), F.explode("probes").alias("pc"), *adt)
-    approx = _adc_approx()
-    cand = (
-        index.withColumnRenamed("vec_id", "neighbor_id")
-        .join(
-            F.broadcast(queries),
-            (F.col("cluster") == F.col("pc"))
-            & (F.col("neighbor_id") != F.col("q_id")),
-        )
-        .select("q_id", "neighbor_id", approx.alias("approx_dist2"))
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc("approx_dist2"), F.asc("neighbor_id")
-    )
-    top3 = (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id", "approx_dist2", "rank")
+    quantizers = ann_index.train(emb, _PQ_DIM, _PQ_K, _PQ_ITERS, _KM_K, _KM_ITERS)
+    cand, top3 = ann_index.search(
+        ann_index.lists(emb, quantizers, _PQ_DIM),
+        emb.where(F.col("vec_id") < 5),
+        quantizers,
+        _PQ_DIM,
     )
     return cand, top3, emb
 
@@ -1601,7 +1480,7 @@ def knn_ivf_recall_at_3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"),
             dbl.alias("qv"),
-            F.posexplode("probes").alias("pr0", "pc"),
+            F.posexplode_outer("probes").alias("pr0", "pc"),
         )
     )
     cand = corpus.join(
@@ -2560,15 +2439,10 @@ def knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     only codes. At 100 TB this is the layout+funnel a billion-vector
     retrieval service runs per query."""
     tune(spark)
+    from backend_etl_spark.operators import ann_index
+
     cand, _, emb = _ivfpq_search(spark, sf_dir)
-    w_adc = Window.partitionBy("q_id").orderBy(
-        F.asc("approx_dist2"), F.asc("neighbor_id")
-    )
-    c20 = (
-        cand.withColumn("rnk", F.row_number().over(w_adc))
-        .where(F.col("rnk") <= 20)
-        .select("q_id", "neighbor_id")
-    )
+    c20 = ann_index.top_k(cand, 20).select("q_id", "neighbor_id")
     dbl = F.transform(F.col("embedding"), lambda v: v.cast("double"))
     qv = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q2"), dbl.alias("qv")
@@ -2742,93 +2616,45 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw-vector variant. The oracle replays residual computation,
     both residual-space Lloyd's fits, and the per-probe ADC tables."""
     tune(spark)
-    from backend_etl_spark.operators.clustering import _as_double, _dist2
+    from backend_etl_spark.operators import ann_index
 
     emb = load_table(spark, sf_dir, "embeddings")
     coarse = clustering.kmeans_fit(emb, k=_KM_K, iters=_KM_ITERS)
-    assigned = clustering.assign_clusters(emb, coarse)
-
-    def cent_for(col):
-        # literal arrays via one SQL parse per centroid — not dim py4j
-        # F.lit calls (see clustering._lit_vec_sql; r13 driver-side cost)
-        expr = None
-        for cid, cv in sorted(coarse.items()):
-            arr = clustering._lit_vec(cv)
-            expr = (
-                F.when(col == cid, arr)
-                if expr is None
-                else expr.when(col == cid, arr)
-            )
-        return expr
-
-    resid = assigned.select(
+    resid_of = ann_index.residual(coarse)
+    resid = clustering.assign_clusters(emb, coarse).select(
         "vec_id",
         "cluster",
-        F.zip_with(
-            _as_double(F.col("embedding")),
-            cent_for(F.col("cluster")),
-            lambda a, b: a - b,
-        ).alias("embedding"),
+        resid_of(clustering._as_double(F.col("embedding")), F.col("cluster")).alias(
+            "embedding"
+        ),
     )
-    halves = {
-        0: F.slice("embedding", 1, _PQ_HALF),
-        1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
-    codebooks = clustering.kmeans_fit_multi(
-        {s: resid.select("vec_id", sl.alias("embedding")) for s, sl in halves.items()},
-        k=_PQ_K,
-        iters=_PQ_ITERS,
-    )
-    # single-pass residual encode: both subspace argmins in ONE
-    # Arrow-batched kernel over resid (r9 — attested numerics, no
-    # per-entry expression compile; no corpus-wide vec_id joins). The
-    # residual column is already double, so the kernel's upcast is a
-    # no-op.
-    renc = clustering.multi_encode_np(
-        {
-            "code0": (codebooks[0], (0, _PQ_HALF)),
-            "code1": (codebooks[1], (_PQ_HALF, _PQ_DIM)),
-        }
-    )(F.col("embedding"))
+    codebooks = ann_index.train(resid, _PQ_DIM, _PQ_K, _PQ_ITERS)
+    renc = ann_index.encode(codebooks, _PQ_DIM)
     index = resid.select(
-        "vec_id",
+        F.col("vec_id").alias("neighbor_id"),
         "cluster",
         *[renc[f"code{s}"].alias(f"code{s}") for s in (0, 1)],
     )
-
     # per-(query, probe) residual → per-probe ADC tables
-    probes = (
+    queries = (
         clustering.probe_clusters(emb.where(F.col("vec_id") < 5), coarse, nprobe=2)
         .select(
             F.col("vec_id").alias("q_id"),
-            _as_double(F.col("embedding")).alias("qv"),
-            F.explode("probes").alias("pc"),
+            clustering._as_double(F.col("embedding")).alias("qv"),
+            F.explode_outer("probes").alias("pc"),
         )
-        .withColumn(
-            "rv", F.zip_with("qv", cent_for(F.col("pc")), lambda a, b: a - b)
-        )
+        .select("q_id", "pc", resid_of(F.col("qv"), F.col("pc")).alias("rv"))
+        .select("q_id", "pc", *ann_index.adc_tables(codebooks, _PQ_DIM, F.col("rv")))
     )
-    rv_half = {
-        0: F.slice("rv", 1, _PQ_HALF),
-        1: F.slice("rv", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
-    adt = _adc_maps(codebooks, lambda s, cw: _dist2(rv_half[s], cw))
-    queries = probes.select("q_id", "pc", *adt)
-    approx = _adc_approx()
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc("approx_dist2"), F.asc("neighbor_id")
-    )
-    return (
-        index.withColumnRenamed("vec_id", "neighbor_id")
-        .join(
+    cand = (
+        index.join(
             F.broadcast(queries),
             (F.col("cluster") == F.col("pc"))
             & (F.col("neighbor_id") != F.col("q_id")),
         )
-        .select("q_id", "neighbor_id", approx.alias("approx_dist2"))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
+        .select("q_id", "neighbor_id", ann_index.adc_approx().alias("approx_dist2"))
     )
+    return ann_index.top_k(cand, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -3159,16 +2985,14 @@ def quality_trigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _persisted_ivfpq(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse — cached per process) the persisted IVF-PQ index
-    for this sf_dir's embeddings table."""
-    import os
-
+    for this sf_dir's embeddings table, staged under a directory named
+    for the table's file identity (a different or rewritten table gets
+    its own)."""
     from backend_etl_spark.operators import ann_index
-    from backend_etl_spark.sources.loader import staging_dir
+    from backend_etl_spark.sources.loader import input_digest, staging_dir
 
-    path = staging_dir(
-        "ivfpq", os.path.basename(os.path.abspath(sf_dir).rstrip("/"))
-    )
     emb = load_table(spark, sf_dir, "embeddings")
+    path = staging_dir("ivfpq", input_digest(emb))
     return ann_index.build_ivfpq_index(
         emb, path, _KM_K, _KM_ITERS, _PQ_K, _PQ_ITERS, _PQ_DIM
     )
@@ -3228,38 +3052,16 @@ def knn_ivfpq_search_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     split loses nothing."""
     tune(spark)
     from backend_etl_spark.operators import ann_index
-    from backend_etl_spark.operators.clustering import _as_double, _dist2
 
     path = _persisted_ivfpq(spark, sf_dir)
-    cents = ann_index.load_centroids(spark, path)
-    lists = ann_index.load_lists(spark, path)
     emb = load_table(spark, sf_dir, "embeddings")
-    halves = {
-        0: F.slice("embedding", 1, _PQ_HALF),
-        1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
-    codebooks = {0: cents["pq0"], 1: cents["pq1"]}
-    adt = _adc_maps(codebooks, lambda s, cw: _dist2(_as_double(halves[s]), cw))
-    queries = clustering.probe_clusters(
-        emb.where(F.col("vec_id") < 5), cents["coarse"], nprobe=2
-    ).select(F.col("vec_id").alias("q_id"), F.explode("probes").alias("pc"), *adt)
-    cand = (
-        lists.withColumnRenamed("vec_id", "neighbor_id")
-        .join(
-            F.broadcast(queries),
-            (F.col("cluster") == F.col("pc"))
-            & (F.col("neighbor_id") != F.col("q_id")),
-        )
-        .select("q_id", "neighbor_id", _adc_approx().alias("approx_dist2"))
+    _, top3 = ann_index.search(
+        ann_index.load_lists(spark, path),
+        emb.where(F.col("vec_id") < 5),
+        ann_index.load_centroids(spark, path),
+        _PQ_DIM,
     )
-    w = Window.partitionBy("q_id").orderBy(
-        F.asc("approx_dist2"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= 3)
-        .select("q_id", "neighbor_id", "approx_dist2", "rank")
-    )
+    return top3
 
 
 _REG2["knn_ivfpq_search_persisted"].oracle = _REG2["knn_ivfpq_adc"].oracle

@@ -289,61 +289,27 @@ def streaming_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB/day embedding feed keep its ANN index fresh without ever
     retraining or re-encoding history (the FAISS add() discipline).
 
-    Scale shape: per batch, encode is map-only (literal centroids);
+    Scale shape: per batch, encode is map-only (frozen centroids);
     the append's anti-join probes only the vec_id key column of the
     existing lists. Nothing driver-side but the k×dim centroid pulls
     at train time."""
     tune(spark)
     from backend_etl_spark import sink
-    from backend_etl_spark.operators import clustering
+    from backend_etl_spark.operators import ann_index
     from backend_etl_spark.sources.loader import scratch_dir
 
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 10 < 8)
     inc = emb.where(F.col("vec_id") % 10 >= 8)
 
-    halves = {
-        0: F.slice("embedding", 1, _PQ_HALF),
-        1: F.slice("embedding", _PQ_HALF + 1, _PQ_DIM - _PQ_HALF),
-    }
     # ONE train for all three quantizers (coarse + 2 PQ codebooks,
     # per-tag k/iters): a size job, then every Lloyd round of the three
     # fits in one grouped-map job. The base slice's ids are not dense
-    # (vec_id % 10 < 8); seeds stride on id values, as the oracle does
-    fits = clustering.kmeans_fit_multi(
-        {
-            0: base.select("vec_id", halves[0].alias("embedding")),
-            1: base.select("vec_id", halves[1].alias("embedding")),
-            2: base,
-        },
-        k={0: _PQ_K, 1: _PQ_K, 2: _KM_K},
-        iters={0: _PQ_ITERS, 1: _PQ_ITERS, 2: _KM_ITERS},
-    )
-    coarse, codebooks = fits[2], {0: fits[0], 1: fits[1]}
-
-    # single-pass encode: coarse + both subspace argmins in ONE
-    # Arrow-batched kernel (no per-subspace vec_id joins — see
-    # ann_index), the same _nearest fold the fit assigned with. r9: it
-    # replaced three literal-centroid argmin expressions at ~3.6x the
-    # throughput, with no janino compile of the 3-quantizer expression
-    # tree on the entry's cold path. Centroids ride the UDF closure —
-    # the k×dim broadcast pattern, nothing driver-side per row.
-    kern = clustering.multi_encode_np(
-        {
-            "cluster": (coarse, None),
-            "code0": (codebooks[0], (0, _PQ_HALF)),
-            "code1": (codebooks[1], (_PQ_HALF, _PQ_DIM)),
-        }
-    )
-
-    def encode(df: DataFrame) -> DataFrame:
-        e = kern(clustering._as_double(F.col("embedding")))
-        return df.select(
-            "vec_id",
-            e["cluster"].alias("cluster"),
-            e["code0"].alias("code0"),
-            e["code1"].alias("code1"),
-        )
+    # (vec_id % 10 < 8); seeds stride on id values, as the oracle does.
+    # Every batch is encoded against these frozen quantizers by the one
+    # Arrow-batched 3-quantizer kernel (ann_index.encode); centroids ride
+    # the UDF closure, nothing driver-side per row.
+    quantizers = ann_index.train(base, _PQ_DIM, _PQ_K, _PQ_ITERS, _KM_K, _KM_ITERS)
 
     base_dir = scratch_dir("ivfpq-append")
     src, lists, ckpt = f"{base_dir}/src", f"{base_dir}/lists", f"{base_dir}/ckpt"
@@ -353,7 +319,7 @@ def streaming_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the layout starts at one file per list (every later batch's
     # anti-join scans the lists table; small files are pure tax)
     sink.write_idempotent(
-        encode(base).repartition("cluster"),
+        ann_index.lists(base, quantizers, _PQ_DIM).repartition("cluster"),
         lists,
         ["vec_id"],
         partition_cols=["cluster"],
@@ -370,7 +336,10 @@ def streaming_ivfpq_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _append(batch: DataFrame, batch_id: int) -> None:
         sink.write_idempotent(
-            encode(batch), lists, ["vec_id"], partition_cols=["cluster"]
+            ann_index.lists(batch, quantizers, _PQ_DIM),
+            lists,
+            ["vec_id"],
+            partition_cols=["cluster"],
         )
 
     with drain_conf(spark):

@@ -259,19 +259,17 @@ _ZORDER_BUILT: set[str] = set()
 
 
 def _zorder_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write events in z-order layout once per process: zval =
-    morton2(user_id & MASK, day8), directory-partitioned on the top
-    z bits (zbucket) with each directory's file sorted by zval."""
-    import os
+    """Write events in z-order layout once per process and events
+    table: zval = morton2(user_id & MASK, day8), directory-partitioned
+    on the top z bits (zbucket) with each directory's file sorted by
+    zval. The directory is named for the table's file identity, so a
+    different or rewritten table gets its own layout."""
+    from backend_etl_spark.sources.loader import input_digest, staging_dir
 
-    from backend_etl_spark.sources.loader import staging_dir
-
-    path = staging_dir(
-        "zorder", os.path.basename(os.path.abspath(sf_dir).rstrip("/"))
-    )
+    ev = load_table(spark, sf_dir, "events")
+    path = staging_dir("zorder", input_digest(ev))
     if path in _ZORDER_BUILT:
         return path
-    ev = load_table(spark, sf_dir, "events")
     staged = (
         ev.select(
             "event_id",

@@ -16,10 +16,12 @@ averages are rounded to 6 dp each update on both paths, so the whole
 trajectory is engine-reproducible (the DuckDB oracle unrolls the same
 iterations in SQL and lands on bit-identical centroids).
 
-Every row-to-centroid assignment in this module runs through ONE
-distance fold (_nearest). Only the multi-probe argsort
-(probe_clusters) and single-centroid distances (_dist2) stay Catalyst
-literal expressions — they serve a handful of query rows.
+Every centroid distance in the engine comes from ONE rounded
+distance-matrix fold (_dist_matrix), in Arrow-batched numpy kernels.
+Its reductions are the argmin (_nearest: assignment, encode, every fit
+round), the stable argsort[:nprobe] (_probes: probe_clusters) and the
+whole row, which is an ADC table (operators/ann_index.py). Probes,
+assignments and ADC tables therefore round alike.
 
 Determinism: seeds are strided picks over vec_id, argmin ties break on
 cluster id, folds run in array order.
@@ -42,85 +44,6 @@ def _as_double(col: Column) -> Column:
     return F.transform(col, lambda v: v.cast("double"))
 
 
-def _lit_vec_sql(values) -> str:
-    """SQL text for a literal ARRAY<DOUBLE>. ``repr(float)`` is the
-    shortest decimal that round-trips in IEEE-754; Spark's lexer parses
-    the ``D`` suffix with Java's Double.parseDouble, which lands on the
-    identical bit pattern — so the array VALUES are exactly F.lit's.
-    Built as ONE string/F.expr parse instead of dim py4j ``F.lit``
-    round-trips: a k=8, dim=64 centroid table was measured ~1 s of pure
-    DRIVER-side expression construction per Lloyd phase the old way
-    (r13, guide §1.2 — per-task work includes the driver's).
-
-    Non-finite components (degenerate input data) render as explicit
-    CAST literals — ``repr`` would produce ``infD``/``nanD``, which the
-    SQL lexer rejects (r13 ADVICE; the old F.lit path accepted them)."""
-
-    def _fmt(x) -> str:
-        x = float(x)
-        if x != x:
-            return "CAST('NaN' AS DOUBLE)"
-        if x == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if x == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return f"{x!r}D"
-
-    return "array(" + ",".join(_fmt(x) for x in values) + ")"
-
-
-def _lit_vec(values) -> Column:
-    """Literal ARRAY<DOUBLE> column — see _lit_vec_sql."""
-    return F.expr(_lit_vec_sql(values))
-
-
-def _dist2(v: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance to a literal centroid — ordered fold, exactly
-    reproducible as list_reduce in the oracle. Single-centroid helper
-    (residual/ADC paths); the k-way argsort uses _centroid_structs."""
-    c = _lit_vec(centroid)
-    return F.aggregate(
-        F.zip_with(v, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _centroid_structs(
-    centroids: dict[int, list[float]], v: Column
-) -> Column:
-    """Array of ``(d, cid)`` structs: squared distance from ``v`` (a
-    double array) to every literal centroid. ONE shared lambda over a
-    literal array-of-structs rather than k unrolled distance
-    expressions — ~40% less analysis/codegen time at identical
-    numerics (same zip_with fold order, same DIST_DP rounding). The
-    literal table is assembled as one SQL string (see _lit_vec_sql):
-    k×dim py4j F.lit calls were the dominant cost of building this
-    expression on the driver."""
-    carr = F.expr(
-        "array("
-        + ",".join(
-            f"named_struct('cv', {_lit_vec_sql(cv)}, 'cid', {int(cid)})"
-            for cid, cv in sorted(centroids.items())
-        )
-        + ")"
-    )
-    return F.transform(
-        carr,
-        lambda c: F.struct(
-            F.round(
-                F.aggregate(
-                    F.zip_with(v, c["cv"], lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                DIST_DP,
-            ).alias("d"),
-            c["cid"].alias("cid"),
-        ),
-    )
-
-
 def _centroid_matrix(
     centroids: dict[int, list[float]],
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -132,27 +55,42 @@ def _centroid_matrix(
     )
 
 
-def _nearest(
-    X: np.ndarray, cids: np.ndarray, C: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """The nearest-centroid fold every assignment in this module runs:
-    per row of ``X``, the id (from ``cids``) of the closest row of ``C``
-    and its rounded squared distance.
+def _dist_matrix(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """The one centroid-distance fold: the rounded squared L2 distance
+    from every row of ``X`` to every row of ``C``. A row of the result
+    is an ADC table; _nearest and _probes reduce it.
 
     Distances accumulate SEQUENTIALLY over dims (vectorized across the
     row batch, looped over j), so every cell sees the exact IEEE op
     sequence ``((x1-c1)² + (x2-c2)²) + ...`` the oracle's list_reduce
     produces. Rounding is floor(d·1e6 + 0.5)/1e6 — half-away-from-zero
     on the binary value for d ≥ 0, which matches the DuckDB oracle's
-    round(). np.argmin takes the FIRST minimum, which IS the tie-break
-    on lowest cluster id."""
+    round()."""
     D = np.zeros((X.shape[0], C.shape[0]))
     for j in range(X.shape[1]):
         diff = X[:, j, None] - C[None, :, j]
         D += diff * diff
-    D = np.floor(D * 1e6 + 0.5) / 1e6
+    return np.floor(D * 1e6 + 0.5) / 1e6
+
+
+def _nearest(
+    X: np.ndarray, cids: np.ndarray, C: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per row of ``X``, the id (from ``cids``) of the closest row of
+    ``C`` and its rounded squared distance. np.argmin takes the FIRST
+    minimum, which IS the tie-break on lowest cluster id (``cids`` is
+    in id order)."""
+    D = _dist_matrix(X, C)
     idx = D.argmin(axis=1)
     return cids[idx].astype("int32"), D[np.arange(len(idx)), idx]
+
+
+def _probes(X: np.ndarray, cids: np.ndarray, C: np.ndarray, nprobe: int) -> np.ndarray:
+    """Per row of ``X``, the ids of the ``nprobe`` closest rows of ``C``
+    in distance order; a stable sort breaks ties on lowest id, so the
+    first probe is _nearest's argmin."""
+    order = np.argsort(_dist_matrix(X, C), axis=1, kind="stable")[:, :nprobe]
+    return cids[order].astype("int32")
 
 
 def _assign_np_udf_multi(cent_by_tag: dict[int, dict[int, list[float]]]):
@@ -284,28 +222,20 @@ def _plan_key(df: DataFrame) -> tuple[str, tuple] | None:
     parquet path, so without it two scale factors would collide),
     each file stamped with (size, mtime_ns) so a parquet file
     REWRITTEN IN PLACE (regenerated fixture, refreshed snapshot)
-    changes the key instead of silently serving stale centroids.
-    Non-local URIs fall back to path identity — a remote object store
-    is immutable-by-convention (new snapshot = new path)."""
-    import os
+    changes the key instead of silently serving stale centroids
+    (loader.input_files)."""
     import re
 
-    paths = sorted(df.inputFiles())
-    if not paths:
+    from backend_etl_spark.sources.loader import input_files
+
+    files = input_files(df)
+    if not files:
         # in-memory relation (LogicalRDD/LocalRelation): its plan string
         # elides the data, so two different datasets would collide —
         # never memoize these
         return None
-    files = []
-    for p in paths:
-        local = p[len("file:"):] if p.startswith("file:") else None
-        try:
-            st = os.stat(local) if local else None
-        except OSError:
-            st = None
-        files.append((p, st.st_size, st.st_mtime_ns) if st else (p,))
     s = re.sub(r"#\d+", "#", df._jdf.queryExecution().analyzed().toString())
-    return s, tuple(files)
+    return s, files
 
 
 def kmeans_fit(
@@ -314,7 +244,6 @@ def kmeans_fit(
     iters: int = 3,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
-    n: int | None = None,
 ) -> dict[int, list[float]]:
     """Lloyd's k-means; returns the final centroid table. ``iters``
     assignment passes, ``iters - 1`` centroid updates (the last
@@ -337,8 +266,7 @@ def kmeans_fit(
     non-NULL seed raise ValueError.
 
     Fits are memoized per process (see _FIT_CACHE) — callers get a
-    defensive copy, never the cached object. ``n`` is accepted from
-    callers that already counted the rows; the path job counts anyway.
+    defensive copy, never the cached object.
     """
     return kmeans_fit_multi({0: df}, k, iters, id_col, emb_col)[0]
 
@@ -680,18 +608,28 @@ def probe_clusters(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """Multi-probe assignment: adds ``probes`` — the ``nprobe`` nearest
-    centroid ids in distance order (ties on cluster id). A map-only
-    literal-centroid argsort (it serves a few query rows); exploding
-    ``probes`` yields the (row, probe_cluster) relation an IVF search
-    joins on. nprobe is THE recall/cost knob at scale: probe cost grows
-    linearly, recall approaches exact as nprobe → k.
+    centroid ids in distance order (ties on cluster id), NULL for a
+    NULL embedding. A map-only Arrow-batched argsort (_probes) over the
+    same rounded fold as assign_clusters, so the first probe IS the
+    assigned cluster; exploding ``probes`` yields the (row,
+    probe_cluster) relation an IVF search joins on. nprobe is THE
+    recall/cost knob at scale: probe cost grows linearly, recall
+    approaches exact as nprobe → k.
 
-    Its distances use the same fold as _nearest but F.round (HALF_UP on
-    the shortest decimal repr) instead of floor(d·1e6 + 0.5)/1e6, so the
-    first probe can differ from assign_clusters when a distance lands
-    within an ulp of an exact .5e-6 midpoint (witness pinned in
-    tests/test_clustering.py)."""
-    v = _as_double(F.col(emb_col))
-    ranked = F.array_sort(_centroid_structs(centroids, v))
-    probes = F.transform(F.slice(ranked, 1, nprobe), lambda s: s["cid"])
-    return df.withColumn("probes", probes)
+    Explode ``probes`` with explode_outer (or posexplode_outer): for a
+    plain explode Catalyst infers size(probes) > 0, pushes it below the
+    projection and runs the kernel twice. A NULL list's row (probe
+    NULL) joins no inverted list either way."""
+    cids, C = _centroid_matrix(centroids)
+
+    @F.pandas_udf("array<int>")
+    def _probe(s: pd.Series) -> pd.Series:
+        out = [None] * len(s)
+        live = np.flatnonzero(s.notna().to_numpy())
+        if len(live):
+            X = np.stack(s.iloc[live].to_numpy()).astype(np.float64)
+            for i, p in zip(live, _probes(X, cids, C, nprobe)):
+                out[i] = p
+        return pd.Series(out)
+
+    return df.withColumn("probes", _probe(_as_double(F.col(emb_col))))

@@ -13,9 +13,9 @@ Reproduces the reference's sink semantics Spark-first:
   ``if count:``).
 
 Scale notes: the anti-join reads only the key columns of the sink
-(column-pruned parquet scan). At 100 TB the sink would be partitioned by
-ingest date so the anti-join prunes to recent partitions; with an ACID
-table format this collapses into MERGE. The state table is tiny
+(column-pruned parquet scan), but of the whole key history, so its cost
+grows with the sink; with an ACID table format this collapses into
+MERGE. The state table is tiny
 (|tenants| × |platforms|), so its merge runs on the driver: pyarrow
 reads the one file, folds the updates in with max-per-key and writes a
 fresh copy that is swapped in atomically (write-new+swap). No Spark job
@@ -58,7 +58,6 @@ def write_idempotent(
     path: str,
     key_cols: list[str],
     partition_cols: list[str] | None = None,
-    prune=None,
     assume_unique: bool = False,
 ) -> int:
     """Append `df` to parquet at `path`, skipping rows whose natural key
@@ -67,15 +66,7 @@ def write_idempotent(
 
     Scale knobs:
     - ``partition_cols``: hive-partition the sink layout (e.g. ingest
-      date). At 100 TB the key scan for the anti-join must not touch
-      the whole table.
-    - ``prune``: a Column predicate restricting which existing
-      partitions the anti-join reads (the caller's late-data horizon,
-      e.g. ``col('ingest_date') >= batch_min_date``). With a horizon H,
-      the anti-join cost is O(recent partitions), not O(history) —
-      correct as long as redelivery never arrives later than H (the
-      reference's overlap windows guarantee exactly that, SURVEY §2.10
-      W7).
+      date, or the coarse cluster of an inverted-list table).
     - ``assume_unique``: the CALLER asserts this batch is already
       key-unique (e.g. a bulk initial load keyed on a source table's
       primary key) — skips the intra-batch dropDuplicates shuffle. The
@@ -83,7 +74,7 @@ def write_idempotent(
       unchanged; only duplicate keys WITHIN one asserted batch would
       slip through.
     """
-    batch = new_rows(df, path, key_cols, prune, assume_unique)
+    batch = new_rows(df, path, key_cols, assume_unique)
     # rows-appended metric rides the write action itself (Observation =
     # accumulator-backed, SURVEY §2.6 A1's per-task count) — one pass,
     # no persist, no second job. An all-duplicate batch writes an empty
@@ -101,20 +92,17 @@ def new_rows(
     df: DataFrame,
     path: str,
     key_cols: list[str],
-    prune=None,
     assume_unique: bool = False,
 ) -> DataFrame:
     """The dedup half of ``write_idempotent``: the rows of ``df`` whose
     natural key is neither repeated earlier in the batch nor already in
-    the sink at ``path`` (``prune`` and ``assume_unique`` as there).
+    the sink at ``path`` (``assume_unique`` as there).
     Lazy; for callers that observe or drop columns before their own
     append."""
     spark = df.sparkSession
     batch = df if assume_unique else df.dropDuplicates(key_cols)
     if _sink_exists(path):
         existing = spark.read.parquet(path)
-        if prune is not None:
-            existing = existing.where(prune)
         # eqNullSafe so cross-batch dedup matches dropDuplicates' NULL
         # semantics: a row with a NULL key column is appended once, not
         # re-appended on every redelivery (null-unsafe equality would

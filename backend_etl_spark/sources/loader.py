@@ -59,6 +59,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def input_files(df: DataFrame) -> tuple:
+    """The identity of ``df``'s input: its files in path order, each
+    stamped with (size, mtime_ns), so a file rewritten in place changes
+    it. Non-local URIs fall back to path identity — a remote object
+    store is immutable-by-convention (new snapshot = new path). Empty
+    for an in-memory relation."""
+    files = []
+    for p in sorted(df.inputFiles()):
+        local = p[len("file:"):] if p.startswith("file:") else None
+        try:
+            st = os.stat(local) if local else None
+        except OSError:
+            st = None
+        files.append((p, st.st_size, st.st_mtime_ns) if st else (p,))
+    return tuple(files)
+
+
+def input_digest(df: DataFrame) -> str:
+    """A short hex digest of ``input_files(df)``: the staging-directory
+    name of a layout built from ``df``, so two inputs never share one."""
+    import hashlib
+
+    return hashlib.sha1(repr(input_files(df)).encode()).hexdigest()[:16]
+
+
 _STAGING_ROOT: str | None = None
 
 

@@ -1,10 +1,11 @@
 """k-means clustering operators (operators/clustering.py): the one
-nearest-centroid kernel against the Catalyst literal fold, its NULL
-contract and empty-batch guard, the multi-probe argsort's midpoint-ulp
-divergence from it, the one Lloyd's kernel against the phase loop and
-the grouped per-cell fit against individual fits, the fit's job count,
-the cell size bound, the F.round emulation the kernel's updates use,
-and the per-process fit memo."""
+distance fold (_dist_matrix) against an independent Catalyst literal
+fold kept here as the reference, its NULL contract and empty-batch
+guard, probe/assignment agreement on a midpoint-ulp witness, the one
+Lloyd's kernel against the phase loop and the grouped per-cell fit
+against individual fits, the fit's job count, the cell size bound, the
+F.round emulation the kernel's updates use, and the per-process fit
+memo."""
 
 from __future__ import annotations
 
@@ -34,17 +35,51 @@ _SCHEMA = "vec_id long, cell int, embedding array<double>"
 # ------------------------------------------------------ assignment kernel
 
 
+def _lit_vec_sql(values) -> str:
+    """SQL text for a literal ARRAY<DOUBLE>: ``repr(float)`` is the
+    shortest decimal that round-trips, and Spark parses the ``D`` suffix
+    to the identical bit pattern."""
+    return "array(" + ",".join(f"{float(x)!r}D" for x in values) + ")"
+
+
+def _literal_fold(centroids, v):
+    """The reference fold in Catalyst: an array of ``(d, cid)`` structs,
+    d the F.round(…, 6) squared distance from ``v`` to every literal
+    centroid, summed left to right from 0.0 as the kernel sums."""
+    carr = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('cv', {_lit_vec_sql(cv)}, 'cid', {int(cid)})"
+            for cid, cv in sorted(centroids.items())
+        )
+        + ")"
+    )
+    return F.transform(
+        carr,
+        lambda c: F.struct(
+            F.round(
+                F.aggregate(
+                    F.zip_with(v, c["cv"], lambda a, b: (a - b) * (a - b)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ),
+                C.DIST_DP,
+            ).alias("d"),
+            c["cid"].alias("cid"),
+        ),
+    )
+
+
 @pytest.mark.parametrize("dup_every", [0, 3])
 def test_np_assign_matches_literal_argmin(spark, dup_every):
-    """assign_clusters' numpy kernel equals the Catalyst literal fold
-    (_centroid_structs, which probe_clusters ranks with) on the same
-    vectors: same cluster ids AND bit-equal distances, planted ties
-    included."""
+    """assign_clusters' numpy kernel equals the independent Catalyst
+    literal fold on the same vectors: same cluster ids AND bit-equal
+    distances, planted ties included."""
     df = _vecs(spark, 400, dup_every=dup_every).cache()
     cents = C.seed_centroids(df, k=40)
 
     via_np = C.assign_clusters(df, cents).select("vec_id", "cluster", "dist2")
-    best = F.array_min(C._centroid_structs(cents, C._as_double(F.col("embedding"))))
+    best = F.array_min(_literal_fold(cents, C._as_double(F.col("embedding"))))
     via_lit = df.select(
         "vec_id", best["cid"].alias("cluster"), best["d"].alias("dist2")
     )
@@ -121,10 +156,10 @@ def test_assign_clusters_multi_matches_per_cell_assign(spark):
 # ---------------------------------------------------------------- ulp witness
 
 #: diff whose SQUARE (0.0001255, shortest decimal repr ends in 5) rounds
-#: DOWN under the kernel's floor(d*1e6+0.5)/1e6 (d*1e6 computes a hair
-#: under 125.5 in binary) but UP under probe_clusters' F.round (HALF_UP
-#: on the shortest decimal repr). Found by ulp-scan around
-#: sqrt((k+0.5)e-6) midpoints.
+#: DOWN under the fold's floor(d*1e6+0.5)/1e6 (d*1e6 computes a hair
+#: under 125.5 in binary) but UP under F.round (HALF_UP on the shortest
+#: decimal repr), which the multi-probe argsort used to round with.
+#: Found by ulp-scan around sqrt((k+0.5)e-6) midpoints.
 WITNESS_X = 0.011202678251204039
 
 
@@ -135,32 +170,31 @@ def _first_probe_and_assignment(spark, x, centroids):
     return probe, kern
 
 
-def test_midpoint_ulp_witness_flips_argmin_across_paths(spark):
-    """A vector within an ulp of a .5e-6 distance midpoint gets a
-    DIFFERENT first probe (Catalyst literal argsort) than its
-    assign_clusters cluster (numpy kernel) — the counter-example
-    pinning that probe/assignment agreement is an attested-on-this-data
-    claim, never a universal one."""
+def test_midpoint_ulp_witness_agrees_across_paths(spark):
+    """A vector within an ulp of a .5e-6 distance midpoint gets the SAME
+    first probe as its assign_clusters cluster, and both are the argmin
+    of the floor-rounded distances: probes and assignments reduce one
+    fold, so they cannot round apart."""
     x = WITNESS_X
     d_witness = x * x
-    # kernel rounding vs decimal HALF_UP genuinely diverge on it
+    # floor rounding vs decimal HALF_UP genuinely diverge on it
     assert math.floor(d_witness * 1e6 + 0.5) / 1e6 == 0.000125
     assert repr(d_witness) == "0.0001255"  # shortest repr → HALF_UP 0.000126
     # centroid 0 sits at an unambiguous 0.000126 distance² (both
-    # roundings agree); centroid 1 at the witness distance². Kernel:
-    # 0.000125 < 0.000126 → cluster 1. Literal: tie at 0.000126 →
-    # lowest cid → cluster 0.
+    # roundings agree); centroid 1 at the witness distance²: 0.000125 <
+    # 0.000126 → cluster 1 (HALF_UP would tie at 0.000126 → cluster 0)
     centroids = {0: [x - math.sqrt(0.0001258)], 1: [0.0]}
-    probe, kern = _first_probe_and_assignment(spark, x, centroids)
-    assert probe == 0 and kern == 1, (
-        f"expected the documented divergence (probe 0, kernel 1); "
-        f"got probe={probe} kernel={kern}"
-    )
+    floor_d = {
+        cid: math.floor((x - cv[0]) ** 2 * 1e6 + 0.5) / 1e6
+        for cid, cv in centroids.items()
+    }
+    want = min(floor_d, key=lambda cid: (floor_d[cid], cid))
+    assert want == 1
+    assert _first_probe_and_assignment(spark, x, centroids) == (want, want)
 
 
 def test_paths_agree_away_from_midpoints(spark):
-    """Control: away from the midpoint the two paths agree — the
-    divergence is the midpoint class, not a broken kernel."""
+    """Control: away from the midpoint the two paths agree too."""
     x = 0.0112  # d² = 1.2544e-4, nowhere near a .5e-6 midpoint
     centroids = {0: [x - math.sqrt(0.0001258)], 1: [0.0]}
     assert _first_probe_and_assignment(spark, x, centroids) == (1, 1)

@@ -402,8 +402,9 @@ def test_morton_sql_twin_matches_reference_interleave():
 def test_persisted_ivfpq_search_dynamic_prunes_lists(spark, sf_dir):
     """The persisted IVF-PQ search must (a) probe the inverted lists via
     dynamic partition pruning — unprobed coarse-cell directories never
-    open — and (b) contain no k-means fit: the only scans are the lists,
-    the centroid table (driver-side), and the 5 query vectors."""
+    open — (b) contain no k-means fit: the only scans are the lists,
+    the centroid table (driver-side), and the 5 query vectors — and (c)
+    run its Python kernels over the query vectors only."""
     df = REGISTRY["knn_ivfpq_search_persisted"].fn(spark, sf_dir)
     plan = quality.plan_text(df, "simple")
     assert "dynamicpruningexpression" in plan.lower(), (
@@ -421,6 +422,29 @@ def test_persisted_ivfpq_search_dynamic_prunes_lists(spark, sf_dir):
     for line in emb_scans:
         assert "LessThan(vec_id,5)" in line, (
             "full embeddings scan on the search path — the fit leaked in"
+        )
+    # (c) the probe and ADC kernels run over the 5 query vectors only:
+    # every Python-eval node sits over the vec_id < 5 query scan, never
+    # over the lists scan (a kernel there would run once per candidate),
+    # and no kernel is evaluated twice
+    lines = plan.splitlines()
+    evals = [i for i, line in enumerate(lines) if "EvalPython" in line]
+    assert evals, "expected the probe/ADC kernels in the search plan"
+    for i in evals:
+        depth = len(lines[i]) - len(lines[i].lstrip(" :+-"))
+        sub = []
+        for line in lines[i + 1:]:
+            if len(line) - len(line.lstrip(" :+-")) <= depth:
+                break
+            sub.append(line)
+        scans = [line for line in sub if "FileScan" in line]
+        assert scans and all(
+            "embeddings.parquet" in line and "LessThan(vec_id,5)" in line
+            for line in scans
+        ), f"Python eval over a scan other than the query vectors: {lines[i][:160]}"
+    for kernel in ("_probe(", "_adc("):
+        assert sum(kernel in lines[i] for i in evals) == 1, (
+            f"{kernel[:-1]} is not evaluated exactly once"
         )
 
 

@@ -101,8 +101,8 @@ def test_incremental_pipeline_catchup_then_general(spark, events, tmp_path):
 
 
 def test_partitioned_sink_with_pruned_antijoin(spark, tmp_path):
-    """Partitioned sink layout + horizon-pruned anti-join: dedup holds,
-    and the key scan reads only the pruned partitions."""
+    """Partitioned sink layout: a redelivery of one partition's rows
+    plus one new row appends only the new row, across partitions."""
     from backend_etl_spark.sink import write_idempotent
 
     path = str(tmp_path / "psink")
@@ -115,16 +115,12 @@ def test_partitioned_sink_with_pruned_antijoin(spark, tmp_path):
         "d=2024-01-01", "d=2024-01-02",
     ]
 
-    # redelivery of day-2 rows + one new row, horizon-pruned to day 2
+    # redelivery of day-2 rows + one new row
     b2 = spark.createDataFrame(
         [(3, "2024-01-02", "c"), (4, "2024-01-02", "d")],
         "k bigint, d string, payload string",
     )
-    from pyspark.sql import functions as F2
-
-    n = write_idempotent(
-        b2, path, ["k"], partition_cols=["d"], prune=F2.col("d") >= "2024-01-02"
-    )
+    n = write_idempotent(b2, path, ["k"], partition_cols=["d"])
     assert n == 1
     out = spark.read.parquet(path)
     assert out.count() == 4
